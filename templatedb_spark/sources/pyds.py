@@ -486,45 +486,44 @@ _KVGEN_STREAM_PER_BATCH = 250
 
 
 def pyds_stream_source(spark: SparkSession, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    from templatedb_spark.streaming.gate import _ckpt_dir as _gate_ckpt
-
-    register_python_sources(spark)
-    # uuid, not pid/thread: a bench worker thread can run this spec twice
-    # (warmup + timed), and a reused memory-sink queryName must never risk
-    # appending into a previous drain's table
-    name = f"pyds_stream_{uuid.uuid4().hex[:12]}"
-    q = (
-        spark.readStream.format("kvgen")
-        .option("numRows", _KVGEN_STREAM_ROWS)
-        .option("rowsPerBatch", _KVGEN_STREAM_PER_BATCH)
-        .option("numPartitions", 4)
-        .load()
-        .writeStream.format("memory")
-        .queryName(name)
-        # tmpfs checkpoint: 3 micro-batches × (offset+commit WAL fsyncs) were
-        # pure disk latency for a drain whose checkpoint dies with the call
-        # (see streaming/gate._ckpt_dir)
-        .option("checkpointLocation", _gate_ckpt())
-        .outputMode("append")
-        # availableNow pins the drain's end at the FIRST latestOffset (one
-        # batch of a backlog whose clock advances per poll), so the bounded
-        # backlog drains under processingTime until the row cap is reached —
-        # the same discipline as tests/test_pyds.py's stream drains
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
     import time
 
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        q.processAllAvailable()
-        if spark.table(name).count() >= _KVGEN_STREAM_ROWS:
-            break
-    q.stop()
-    q.awaitTermination()
-    return spark.table(name).select(
+    from pyspark.sql import functions as F
+
+    from templatedb_spark.streaming.drain import drain
+
+    register_python_sources(spark)
+    # the drain's unique query name keeps a reused memory-sink name from
+    # ever appending into a previous drain's table (a bench worker can run
+    # this spec twice); its checkpoint is deleted when the block exits
+    with drain(spark, "pyds_stream") as d:
+        q = (
+            spark.readStream.format("kvgen")
+            .option("numRows", _KVGEN_STREAM_ROWS)
+            .option("rowsPerBatch", _KVGEN_STREAM_PER_BATCH)
+            .option("numPartitions", 4)
+            .load()
+            .writeStream.format("memory")
+            .queryName(d.name)
+            .option("checkpointLocation", d.ckpt)
+            .outputMode("append")
+            # availableNow pins the drain's end at the FIRST latestOffset (one
+            # batch of a backlog whose clock advances per poll), so the bounded
+            # backlog drains under processingTime until the row cap is reached —
+            # the same discipline as tests/test_pyds.py's stream drains
+            .trigger(processingTime="0 seconds")
+            .start()
+        )
+        try:
+            deadline = time.time() + 120
+            while time.time() < deadline:
+                q.processAllAvailable()
+                if spark.table(d.name).count() >= _KVGEN_STREAM_ROWS:
+                    break
+        finally:
+            q.stop()
+        q.awaitTermination()
+    return spark.table(d.name).select(
         F.col("key").cast("long").alias("key"),
         F.col("bucket").cast("int").alias("bucket"),
         F.col("value").alias("value"),

@@ -1,19 +1,17 @@
-"""Driver-gated streaming spec: the Structured Streaming CDC path under the
-DuckDB oracle (VERDICT r3 #8 — the stream==batch twins were pytest-only).
+"""Oracle-gated streaming specs: the Structured Streaming tier under the
+DuckDB oracle. Every chain runs a REAL availableNow drain inside the spec
+callable: stage an input as ordered micro-batch parquet files, drain them
+through the streaming operator under test, return the drained result. The
+scratch lifecycle (staging, query name, session policy, checkpoint,
+cleanup) is `streaming/drain.py`'s; this module holds each chain's
+operator, sink and oracle.
 
-`stream_cdc_kv_state` runs the REAL streaming pipeline end to end inside the
-spec callable:
-
-  1. stage the events feed as three ts-ordered micro-batch parquet files
-     (deterministic split — same shape as tests/test_streaming.py's twin);
-  2. drain them through `streaming/cdc.py`'s availableNow foreachBatch query
-     (maxFilesPerTrigger=1 → three genuine micro-batches), each applied to a
-     KVTable as one atomic MVCC version;
-  3. return the final merged KV state, parsed back to typed columns.
-
-Because micro-batches arrive in feed order and application is atomic,
-the final state must equal the net-effect compaction of the WHOLE feed —
-which is exactly what the oracle SQL computes on the raw events table. A
+`stream_cdc_kv_state` is the template: the events feed drains through
+`streaming/cdc.py`'s foreachBatch query (maxFilesPerTrigger=1 → genuine
+micro-batches), each applied to a KVTable as one atomic MVCC version.
+Because micro-batches arrive in feed order and application is atomic, the
+final state must equal the net-effect compaction of the WHOLE feed — which
+is exactly what the oracle SQL computes on the raw events table. A
 divergence in watermarking, batch boundaries, KV versioning, or the
 delete-shadows contract shows up as a hash mismatch.
 
@@ -24,168 +22,43 @@ original doubles, not formatted strings.
 
 from __future__ import annotations
 
-import tempfile
-
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from templatedb_spark.streaming.cdc import CDC_KEY_OFFSET
+from templatedb_spark.streaming.drain import drain, result_dir, stage_slices, write_parts
 from templatedb_spark.suite import QuerySpec, register
 
-# Trigger-count lever (measured r5, BASELINE.md): each extra micro-batch
-# costs ~1.1-1.3 s/trigger solo. 2 is the semantic minimum (state/versioning
-# must span at least one batch boundary: a session opened in batch 1 must
-# close in batch 2; the KV MVCC chain must apply >1 atomic version).
-# Default stays 3 — two distinct boundaries exercise carry-over →
-# carry-over → close chains, and the adjacent-pair benches showed NO
-# makespan win at 2 (17.1 s vs 18.2 s, steal-clean): the 16-worker pool
-# packs the suite around the streaming chain.
-import os as _os
-
-# Default trigger count for the gated chains. r8: 3 → 2, the semantic
-# minimum for every cross-batch state contract EXCEPT sessionize's
-# carry-then-close chain (which keeps an explicit 3 — a session must be
-# EXTENDED across one boundary and CLOSED across another). The serial
-# trigger chains are the bench makespan's critical path (BENCH_r07 gate
-# breach); each trigger a chain doesn't run is ~1-1.5 s off that path, and
-# the r10 precedent (KV-merge gates 3 → 2, VERDICT r6 #4's lever) showed a
-# third trigger buys no additional coverage once one batch boundary proves
-# the cross-batch contract. The replay fuzz (42→70 seeds) still randomizes
-# 1-5 batch decompositions per operator, so multi-boundary behavior stays
-# under test there.
-_N_MICROBATCHES = max(2, int(_os.environ.get("SPARK_GRAFT_STREAM_TRIGGERS", "2")))
+# Default trigger count: 2 is the semantic minimum for a cross-batch state
+# contract (one batch boundary); chains needing a second boundary stage 3.
+# The replay fuzz randomizes 1-5 batch decompositions per operator, so
+# multi-boundary behaviour stays under test there.
+_N_MICROBATCHES = 2
+_EVENT_ORDER = ("ts", "event_id")
 
 
-def _stage_microbatches(sf_dir: str, out_dir: str, n_batches: int | None = None) -> None:
-    """Split the events feed into N ts-ordered parquet files with mtimes
-    forcing the file-source pickup order (pure pyarrow — preserves the
-    shipped ts physical type so read_events_stream's schema probe sees the
-    same layout as the original file)."""
-    import os
-
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    n_batches = _N_MICROBATCHES if n_batches is None else n_batches
-    t = pq.read_table(f"{sf_dir}/events.parquet")
-    t = t.take(pc.sort_indices(t, sort_keys=[("ts", "ascending"), ("event_id", "ascending")]))
-    n = t.num_rows
-    step = (n + n_batches - 1) // n_batches
-    for i in range(n_batches):
-        part = t.slice(i * step, step)
-        p = f"{out_dir}/part-{i}.parquet"
-        pq.write_table(part, p)
-        os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
+def _stage_events(sf_dir: str, n: int = _N_MICROBATCHES):
+    """Stager: the events feed as n (ts, event_id)-ordered micro-batches."""
+    return lambda out: stage_slices(
+        pq.read_table(f"{sf_dir}/events.parquet"), out, n, _EVENT_ORDER
+    )
 
 
-def _ckpt_dir() -> str:
-    """Fresh checkpoint dir for ONE gated drain, on the fastest usable tier.
-
-    The gated chains are self-contained availableNow drains: the checkpoint
-    (offset/commit WALs + state-store deltas) is written, read within the
-    same call, and deleted — durability past the call has zero value, yet
-    every trigger was paying fsync-to-disk latency for it (measured r11,
-    stream_probe durationMs: state commitTimeMs 80-870 ms/batch + walCommit/
-    commitOffsets ~40 ms each with /tmp on /dev/vda; moving the checkpoint
-    to tmpfs cut the interval-join drain 3.6-4.2 → 2.8 s, ingest 1.3 → 1.0 s
-    — guide §5/§6: don't pay durable-I/O costs for data with no durability
-    requirement). A REAL deployment with restart semantics points this at
-    reliable storage: set SPARK_GRAFT_STREAM_CKPT to any path (or to "disk"
-    to force the historical java-tmp behavior).
-    """
-    import atexit
-    import shutil
-
-    base = _os.environ.get("SPARK_GRAFT_STREAM_CKPT", "")
-    if base == "disk":
-        base = tempfile.gettempdir()
-    elif not base:
-        shm = "/dev/shm"
-        base = shm if _os.access(shm, _os.W_OK) else tempfile.gettempdir()
-    d = tempfile.mkdtemp(prefix="gate_ckpt_", dir=base)
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return d
+def _orders_stream(session: SparkSession, sf_dir: str, stage: str) -> DataFrame:
+    schema = session.read.parquet(f"{sf_dir}/orders.parquet").schema
+    return session.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
 
 
-# NEGATIVE RESULT (r11, measured): moving the gated specs' scratch KVTable
-# roots to tmpfs the way the checkpoints moved was tried and REVERTED — no
-# paired win (tight disk/shm/disk interleaves at sf0.1: 2.53/2.84, 2.85/3.44
-# under heavy host-window drift). Mechanism: Spark's parquet commit is a
-# rename into the page cache with NO fsync, so /tmp writes were never paying
-# disk latency; the checkpoint win (_ckpt_dir) comes from the state-store
-# delta + WAL fsyncs, which KV version writes don't do.
-def _stream_session(spark: SparkSession, stage_dir: str) -> SparkSession:
-    """Clone the session with a state-store-sized shuffle partition count
-    for a JVM-state trigger chain.
-
-    Every streaming stateful operator keeps one state store PER SHUFFLE
-    PARTITION, and each store pays per-trigger open/snapshot/delta-commit
-    I/O regardless of how few rows it holds — at micro-batch sizes that
-    fixed cost dominates addBatch (measured r10, best-of-3 warm at sf0.1,
-    8 → 4 partitions: interval join 3.17 → 2.51 s, window_late 1.88 →
-    1.51 s, hll 2.50 → 1.90 s, cms 2.64 → 2.24 s, mv_wide 2.72 → 2.30 s,
-    dedup_ingest 1.25 → 1.06 s; going further to 2 kept winning for the
-    join but is skipped for headroom). Scale-adaptive, not a local[32]
-    constant: partitions = staged-bytes / 32 MB clamped to [4, ambient]
-    (the same 32 MB/partition rule the bench session itself uses), so any
-    real-scale stage hits the ambient cluster-sized count and ONLY the
-    state-store floor regime shrinks. Python-parallelism-bound chains
-    (sessionize, the near-dup signature maps) deliberately stay on the
-    ambient session — lowering their partition count serializes the Python
-    side (measured: sessionize 3.49 → 4.82 s at 4, 7.80 s at 2).
-
-    newSession() shares the SparkContext (and therefore the FAIR pool
-    local properties) but isolates conf and the temp-view catalog, so
-    concurrent suite queries planning on the ambient session never observe
-    the override."""
-    from pathlib import Path
-
-    try:
-        staged = sum(
-            f.stat().st_size for f in Path(stage_dir).glob("*.parquet")
-        )
-    except OSError:
-        staged = 1 << 60  # unknown layout → assume scale, keep ambient
-    ambient = int(spark.conf.get("spark.sql.shuffle.partitions", "8"))
-    # clamp to [2, ambient] with ambient winning when ambient < 2 — the
-    # inner max() must not RAISE the count above the ambient session's
-    # (ADVICE r10: max-outside-min at ambient=2 yielded 4). Floor 4 → 2
-    # (r11, paired interleaved A/B at sf0.1, best-of-3 warm): interval
-    # join 3.16 → 2.77 s, window_late 2.20 → 2.00 s, static_enrich 1.50 →
-    # 1.33 s, hll 2.33 → 2.23 s, cms 2.91 → 2.69 s, cdc/dedup_ingest/
-    # mv_wide a wash — every per-partition state-store instance pays
-    # per-trigger open/commit I/O, and the join keeps FOUR stores per
-    # partition; floor 1 measured mixed (window_late kept winning,
-    # dedup_ingest and the join's min regressed), so 2 keeps cross-task
-    # overlap while halving the store count.
-    parts = min(ambient, max(2, staged // (32 << 20)))
-    s2 = spark.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", str(parts))
-    s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # State-store provider A/B knob (VERDICT r10 #3): rocksdb routes the
-    # chain's state through RocksDBStateStoreProvider with changelog
-    # checkpointing. Measured r11 (paired interleaved best-of-4, sf0.1, see
-    # OPTIMIZATION_r11.md): RocksDB LOST on every JVM-state chain at this
-    # scale — per-trigger native store open/load dominates the tiny state —
-    # so the default stays the HDFS-backed provider; the knob remains for
-    # cluster-scale states where RocksDB is the right choice.
-    # State-store provider A/B knob (VERDICT r10 #3): rocksdb routes the
-    # chain's state through RocksDBStateStoreProvider with changelog
-    # checkpointing. Measured r11 (stream_probe, paired): RocksDB was a
-    # wash-to-marginal at this state size (join 3.6→3.5 s, ingest −15%,
-    # sessionize a wash) — per-trigger native store open/load replaces the
-    # delta-file cost the tmpfs checkpoint already removed — so the default
-    # stays the HDFS-backed provider; the knob remains for cluster-scale
-    # state where RocksDB is the right choice (events.rocksdb_state_conf).
-    if _os.environ.get("SPARK_GRAFT_STATE_PROVIDER", "") == "rocksdb":
-        from templatedb_spark.streaming.events import rocksdb_state_conf
-
-        for k, v in rocksdb_state_conf().items():
-            s2.conf.set(k, v)
-    # every query this clone starts checkpoints under a fresh per-chain dir
-    # (name-keyed subdirs; gate query names embed the unique stage path)
-    s2.conf.set("spark.sql.streaming.checkpointLocation", _ckpt_dir())
-    return s2
+def _kv_state(snap: DataFrame) -> DataFrame:
+    """KV rows `key -> event_type|value` back to the CDC oracle's columns."""
+    parts = F.split(F.col("value"), r"\|", 2)
+    return snap.select(
+        F.col("key").cast("long").alias("key"),
+        parts.getItem(0).alias("event_type"),
+        parts.getItem(1).cast("double").alias("value"),
+    )
 
 
 def stream_cdc_kv_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -193,32 +66,16 @@ def stream_cdc_kv_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from templatedb_spark.streaming.cdc import changes_from_events, stream_cdc_to_kv
     from templatedb_spark.streaming.events import read_events_stream
 
-    import atexit
-    import shutil
-
-    stage = tempfile.mkdtemp(prefix="cdc_stage_")
-    _stage_microbatches(sf_dir, stage)
-    kv_dir = tempfile.mkdtemp(prefix="cdc_kv_")
-    # the returned DataFrame lazily reads this dir — clean at process exit
-    atexit.register(shutil.rmtree, kv_dir, ignore_errors=True)
     # auto_compact_every=N_MICROBATCHES puts threshold-driven compaction (the
     # reference's leveled trigger, db_impl/mod.rs:950-975) under this oracle:
     # the final batch's commit reaches the threshold and compacts inside the
     # same write lock, so the audited state is read from the compacted base —
     # any auto-compaction bug (lost delta, wrong merge order) hash-mismatches.
-    kv = KVTable(spark, kv_dir, auto_compact_every=_N_MICROBATCHES)
-    stream = changes_from_events(read_events_stream(_stream_session(spark, stage), stage))
-    stream_cdc_to_kv(stream, kv, f"gate_cdc_{abs(hash(stage))}")
-    # the drain is complete and the returned DataFrame reads only the KV
-    # dir — drop the staged micro-batches so repeated runs don't litter /tmp
-    shutil.rmtree(stage, ignore_errors=True)
-    snap = kv.snapshot()  # (key string, value string)
-    parts = F.split(F.col("value"), r"\|", 2)
-    return snap.select(
-        F.col("key").cast("long").alias("key"),
-        parts.getItem(0).alias("event_type"),
-        parts.getItem(1).cast("double").alias("value"),
-    )
+    kv = KVTable(spark, result_dir("cdc_kv_"), auto_compact_every=_N_MICROBATCHES)
+    with drain(spark, "cdc", "jvm_state", _stage_events(sf_dir)) as d:
+        stream = changes_from_events(read_events_stream(d.session, d.stage))
+        stream_cdc_to_kv(stream, kv, d.name, checkpoint_dir=d.ckpt)
+    return _kv_state(kv.snapshot())
 
 
 _STREAM_CDC_ORACLE = f"""
@@ -247,61 +104,23 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Second gated streaming spec: the CUSTOM STATEFUL operator
-# (applyInPandasWithState gap-sessionization, streaming/stateful.py) under
-# the same oracle discipline. (Negative result, measured r4: raising the
-# state-store partition count via a cloned session — 8→32→64 — made the
-# drain SLOWER, 4.1→4.7→5.9 s at sf0.1: per-instance state-store and task
-# overhead beats the extra python parallelism at this group count. The
-# session default stands.) The stream drains the 3-micro-batch staging
-# (state spans batch boundaries — a session opened in batch 1 closes in
-# batch 3 only if a later event arrives past the gap), emitting sessions AS
-# THEY CLOSE; each user's final session stays open in the state store. The
-# oracle is therefore the batch sessionization SQL minus every user's last
-# session — divergence in state carry-over, gap logic, or emit timing
-# hash-mismatches.
+# The CUSTOM STATEFUL operator (applyInPandasWithState gap-sessionization,
+# streaming/stateful.py). The stream drains 3 micro-batches, emitting
+# sessions AS THEY CLOSE; each user's final session stays open in the state
+# store. The oracle is therefore the batch sessionization SQL minus every
+# user's last session — divergence in state carry-over, gap logic, or emit
+# timing hash-mismatches. Python-bound, so it runs on the python_state
+# partition policy (streaming/drain.py).
 # ---------------------------------------------------------------------------
 def stream_sessionize_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from templatedb_spark.streaming.events import read_events_stream
     from templatedb_spark.streaming.stateful import stream_sessionize
 
-    stage = tempfile.mkdtemp(prefix="sess_stage_")
     # explicit 3: the carry-then-close chain — a session extended across
     # boundary 1 must CLOSE across boundary 2; 2 batches can only prove
     # extend-and-close within the same successor batch
-    _stage_microbatches(sf_dir, stage, n_batches=3)
-    name = f"gate_sessions_{os.path.basename(stage).split('_')[-1]}"
-    # Python-stateful partition rule (r11): this chain is bound by serial
-    # per-group Python calls inside each state partition, the OPPOSITE
-    # regime from the JVM-state chains `_stream_session` shrinks — more
-    # partitions = more concurrent Python workers, until per-instance
-    # state-store overhead wins again. With the r11 tmpfs checkpoints the
-    # old r4 measurement (8→32→64 monotonically worse) no longer holds:
-    # paired A/B at sf0.1, two windows, 16 beats ambient-8 by ~10-20%
-    # (2.97 vs 3.31 s; 4.03 vs 5.00 s mins) and 32 loses again. Rule:
-    # double the ambient count, never below ambient, capped at core count
-    # — at real scale ambient is already ≥ cores and this is a no-op.
-    amb = int(spark.conf.get("spark.sql.shuffle.partitions", "8"))
-    cores = spark.sparkContext.defaultParallelism
-    s2 = spark.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", str(min(2 * amb, max(amb, cores))))
-    s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    q = (
-        stream_sessionize(read_events_stream(s2, stage))
-        .writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", _ckpt_dir())  # tmpfs: see _ckpt_dir
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    import shutil
-
-    shutil.rmtree(stage, ignore_errors=True)  # memory sink holds the rows now
-    t = s2.table(name)  # memory-sink temp view lives in the clone's catalog
+    with drain(spark, "sessions", "python_state", _stage_events(sf_dir, 3)) as d:
+        t = d.run(stream_sessionize(read_events_stream(d.session, d.stage)))
     return t.select(
         F.col("user_id").cast("long").alias("user_id"),
         "session_start",
@@ -352,64 +171,36 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Third gated streaming spec (round 5): STREAM-STREAM interval join under
-# the oracle — the join-state machinery (both-side watermarks, cross-batch
-# state retention, interval condition pruning) the first two gates don't
-# touch. Clicks and errors drain from the same 3-batch ts-ordered staging;
-# a click in batch 1 matching an error in batch 2 exercises exactly the
-# state carry-over a real funnel join depends on. Determinism argument:
-# inner-join matches emit immediately; a click needed by a future error
-# satisfies click_ts >= err_ts - 30min > watermark (1 h delay > the 30 min
-# lookback, and batches are ts-ordered), so no needed state is ever evicted
-# — the drained result provably equals the batch interval join, which is
-# the oracle. The final per-error rollup runs as BATCH over the sink table
-# (chaining a streaming agg after a stream-stream join is deliberately
-# avoided; the join is the audited subject).
+# STREAM-STREAM interval join: both-side watermarks, cross-batch state
+# retention, interval condition pruning. A click in batch 1 matching an
+# error in batch 2 exercises exactly the state carry-over a real funnel join
+# depends on. Determinism argument: inner-join matches emit immediately; a
+# click needed by a future error satisfies click_ts >= err_ts - 30min >
+# watermark (1 h delay > the 30 min lookback, and batches are ts-ordered),
+# so no needed state is ever evicted — the drained result provably equals
+# the batch interval join, which is the oracle. The final per-error rollup
+# runs as BATCH over the sink table (the join is the audited subject).
 # ---------------------------------------------------------------------------
 def stream_interval_join_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from templatedb_spark.streaming.events import (
         read_events_stream,
         stream_stream_interval_join,
     )
 
-    stage = tempfile.mkdtemp(prefix="ssj_stage_")
-    # 2 micro-batches, not _N_MICROBATCHES: join state has no carry-over →
-    # carry-over → close chain (that argument is about SESSION state) — one
-    # batch boundary already exercises the full cross-batch join-state
-    # contract (batch-2 probes hitting batch-1 state, watermark retention).
-    # Measured ~1.3 s/trigger; this spec is the suite's longest chain, so
-    # the third trigger bought no coverage at real makespan cost.
-    _stage_microbatches(sf_dir, stage, n_batches=2)
-    name = f"gate_ssjoin_{os.path.basename(stage).split('_')[-1]}"
-    s2 = _stream_session(spark, stage)
-    # skip the trailing NO-DATA micro-batch: an INNER symmetric-hash join
-    # emits every match eagerly inside the data batches; the extra batch
-    # exists only to advance the watermark and evict state, which this
-    # one-shot drain discards anyway. Measured (stream_probe, r11): the
-    # no-data batch cost ~0.6-0.7 s of a ~2.9 s drain (getBatch=0 rows,
-    # full trigger+commit overhead). Output rows are UNCHANGED — eager
-    # emission means the sink table is complete after the last data batch;
-    # oracle-gated below as always. (Append-mode AGG chains like
-    # stream_window_late MUST keep no-data batches: their final windows
-    # only emit when the watermark advances past them.)
-    s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    q = (
-        stream_stream_interval_join(read_events_stream(s2, stage))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)  # memory sink holds the rows now
-    return (
-        s2.table(name)  # memory-sink temp view lives in the clone's catalog
-        .groupBy(F.col("e_user").alias("user_id"), "error_id")
-        .agg(F.count(F.lit(1)).alias("n_recent_clicks"))
+    # 2 micro-batches: join state has no carry-over → carry-over → close
+    # chain — one boundary already exercises the full cross-batch contract
+    with drain(spark, "ssjoin", "jvm_state", _stage_events(sf_dir, 2)) as d:
+        # skip the trailing NO-DATA micro-batch: an INNER symmetric-hash join
+        # emits every match eagerly inside the data batches; the extra batch
+        # only advances the watermark and evicts state, which this one-shot
+        # drain discards anyway (measured r11: ~0.6-0.7 s of a ~2.9 s
+        # drain). Append-mode AGG chains like stream_window_late MUST keep
+        # no-data batches: their final windows only emit when the watermark
+        # advances past them.
+        d.session.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+        t = d.run(stream_stream_interval_join(read_events_stream(d.session, d.stage)))
+    return t.groupBy(F.col("e_user").alias("user_id"), "error_id").agg(
+        F.count(F.lit(1)).alias("n_recent_clicks")
     )
 
 
@@ -432,20 +223,19 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Fourth gated streaming spec (round 6, VERDICT r5 #7): the streaming
-# NEAR-DUP operator (streaming/neardup.py) — the one streaming operator that
-# was pytest-only. Documents drain as 2 doc_id-ordered micro-batches through
-# the per-band applyInPandasWithState pair matcher; a batch-2 doc colliding
-# with a batch-1 doc's signature exercises exactly the cross-batch band
-# state the operator exists for. Determinism argument: signatures are
-# row-local projections (no aggregation state), per-band matching is
-# all-pairs within the bucket regardless of arrival order, and the emitted
-# (doc_a, doc_b) is sorted — so the DISTINCT pair set equals the batch
-# banded self-join over the staged slice, i.e. the dedup_minhash_lsh oracle
-# re-rooted on it (same md5-derived hashes, bit-identical in DuckDB).
-# Verified at sf0.01: the slice's one near-dup pair (120, 332) straddles the
-# batch-1/batch-2 boundary (split at doc_id 248), so a green row PROVES the
-# cross-batch state carry-over, not just within-batch matching.
+# The streaming NEAR-DUP operator (streaming/neardup.py). Documents drain as
+# 2 doc_id-ordered micro-batches through the per-band applyInPandasWithState
+# pair matcher; a batch-2 doc colliding with a batch-1 doc's signature
+# exercises exactly the cross-batch band state the operator exists for.
+# Determinism argument: signatures are row-local projections, per-band
+# matching is all-pairs within the bucket regardless of arrival order, and
+# the emitted (doc_a, doc_b) is sorted — so the DISTINCT pair set equals the
+# batch banded self-join over the staged slice, i.e. the dedup_minhash_lsh
+# oracle re-rooted on it. Verified at sf0.01: the slice's one near-dup pair
+# (120, 332) straddles the batch-1/batch-2 boundary (split at doc_id 248),
+# so a green row PROVES the cross-batch state carry-over. Both near-dup
+# chains stay on the ambient session: lowering their partition count
+# serializes the Python side.
 # ---------------------------------------------------------------------------
 _NEARDUP_SLICE_MOD = 4  # gate corpus slice: doc_id % 4 == 0
 # the stager selects the slice with bit_wise_and(doc_id, MOD-1) == 0 (pyarrow
@@ -458,79 +248,54 @@ assert _NEARDUP_SLICE_MOD & (_NEARDUP_SLICE_MOD - 1) == 0, (
 )
 
 
-def _stage_doc_microbatches(sf_dir: str, out_dir: str, n_batches: int = 2) -> None:
-    """Split documents into N doc_id-ordered parquet files, mtimes forcing
-    the file-source pickup order (pure pyarrow, same discipline as the
-    events stager). The gate stages the deterministic doc_id % 4 == 0 slice
-    (oracle restricted identically): the audited subject is cross-batch band
-    STATE correctness, which one quarter of the corpus exercises fully,
-    while the md5-signature volume — the measured cost driver — stays off
-    the suite's critical path."""
-    import os
-
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(f"{sf_dir}/documents.parquet")
-    t = t.filter(
-        pc.equal(pc.bit_wise_and(t["doc_id"], _NEARDUP_SLICE_MOD - 1), 0)
-    )
-    t = t.take(pc.sort_indices(t, sort_keys=[("doc_id", "ascending")]))
-    n = t.num_rows
-    step = (n + n_batches - 1) // n_batches
-    for i in range(n_batches):
-        part = t.slice(i * step, step)
-        p = f"{out_dir}/part-{i}.parquet"
-        pq.write_table(part, p)
-        os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
-
-
-def stream_neardup_pairs_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
+def _neardup_gate(spark: SparkSession, sf_dir: str, mode: str) -> DataFrame:
+    """Drain the doc_id % 4 == 0 slice (oracle restricted identically: one
+    quarter of the corpus exercises the band state fully while the
+    md5-signature volume stays off the suite's critical path)."""
     from templatedb_spark.streaming.neardup import (
         read_documents_stream,
         stream_neardup_pairs,
     )
 
-    stage = tempfile.mkdtemp(prefix="ndp_stage_")
-    _stage_doc_microbatches(sf_dir, stage, n_batches=2)
-    name = f"gate_neardup_{os.path.basename(stage).split('_')[-1]}"
-    q = (
-        stream_neardup_pairs(read_documents_stream(spark, stage))
-        .writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", _ckpt_dir())
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)  # memory sink holds the rows now
+    def stage(out: str) -> None:
+        mask = pc.equal(pc.bit_wise_and(pc.field("doc_id"), _NEARDUP_SLICE_MOD - 1), 0)
+        stage_slices(pq.read_table(f"{sf_dir}/documents.parquet"), out, 2, ["doc_id"], mask)
+
+    with drain(spark, f"neardup_{mode}", "ambient", stage) as d:
+        t = d.run(stream_neardup_pairs(read_documents_stream(d.session, d.stage), mode=mode))
     # a pair found via several shared bands repeats with the SAME match
     # count — distinct() collapses it (the operator's documented contract)
-    return (
-        spark.table(name)
-        .select(
-            F.col("doc_a").cast("long").alias("doc_a"),
-            F.col("doc_b").cast("long").alias("doc_b"),
-            F.col("matches").cast("long").alias("matches"),
-        )
-        .distinct()
-    )
+    return t.select(
+        F.col("doc_a").cast("long").alias("doc_a"),
+        F.col("doc_b").cast("long").alias("doc_b"),
+        F.col("matches").cast("long").alias("matches"),
+    ).distinct()
 
 
-def _neardup_oracle() -> str:
+def stream_neardup_pairs_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _neardup_gate(spark, sf_dir, "exact")
+
+
+def _neardup_oracle(election: bool = False) -> str:
+    """The batch dedup_minhash_lsh oracle's CTE chain re-rooted on the staged
+    doc_id % 4 == 0 slice. With `election`, its all-pairs cand/est tail is
+    replaced by the representative election: per (band, mh) bucket the
+    representative is MIN(doc_id), pairs are (rep, member)."""
     # lazy import keeps gate.py importable without the dedup module loaded
-    from templatedb_spark.operators.dedup import (
-        _MINHASH_CTES,
-        _MINHASH_MATCH_MIN,
-    )
+    from templatedb_spark.operators.dedup import _MINHASH_CTES, _MINHASH_MATCH_MIN
 
-    # same CTE chain as the batch dedup_minhash_lsh oracle, re-rooted on the
-    # staged doc_id % 4 == 0 slice
     ctes = _MINHASH_CTES.replace("FROM documents", "FROM docs_slice")
+    if election:
+        head, _, _ = ctes.partition("cand AS")  # keep sh/hs/perms/sig
+        ctes = head + """rep AS (SELECT i, mh, MIN(doc_id) AS rep_doc FROM sig GROUP BY i, mh),
+cand AS (SELECT DISTINCT r.rep_doc AS doc_a, s.doc_id AS doc_b
+         FROM sig s JOIN rep r ON s.i = r.i AND s.mh = r.mh AND s.doc_id > r.rep_doc),
+est AS (SELECT c.doc_a, c.doc_b,
+               SUM(CASE WHEN sa.mh = sb.mh THEN 1 ELSE 0 END) AS matches
+        FROM cand c
+        JOIN sig sa ON sa.doc_id = c.doc_a
+        JOIN sig sb ON sb.doc_id = c.doc_b AND sa.i = sb.i
+        GROUP BY 1, 2)"""
     return f"""
 WITH docs_slice AS (
   SELECT * FROM documents WHERE doc_id % {_NEARDUP_SLICE_MOD} = 0
@@ -552,119 +317,60 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Fifth gated streaming spec (round 7, VERDICT r6 #1): the BOUNDED-STATE
-# production mode of the streaming near-dup operator — representative
-# election (streaming/neardup.py mode="representatives"). Each band bucket
-# keeps exactly ONE resident (the first arrival — semantic_dedup's
-# earliest-wins election applied online); later arrivals are scored against
-# the representative only and never enter state, so per-band state grows
-# with DISTINCT buckets, not docs. Determinism argument: the stage is
+# The BOUNDED-STATE production mode of the streaming near-dup operator —
+# representative election (mode="representatives"). Each band bucket keeps
+# exactly ONE resident (the first arrival — semantic_dedup's earliest-wins
+# election applied online); later arrivals are scored against the
+# representative only and never enter state, so per-band state grows with
+# DISTINCT buckets, not docs. Determinism argument: the stage is
 # doc_id-ordered across AND within micro-batches (the operator sorts
 # arrivals per group), so a bucket's representative is provably its MIN
-# doc_id — which is exactly what the oracle elects in SQL. The emitted pair
-# set is therefore {(rep, d): d in bucket, matches(sig_rep, sig_d) >= 8}
-# DISTINCT — the batch election re-rooted on the staged slice. The same
-# 2-batch staging as the exact-twin gate keeps the cross-batch proof: a
-# representative elected in batch 1 must survive in state to pair with a
-# batch-2 arrival, or the row hash-mismatches. Verified at sf0.01: the
-# mode's one emitted pair is (120, 332) with the stage split at doc_id
-# 248|252 — rep 120 is elected in batch 1, its match arrives in batch 2.
+# doc_id — exactly what the oracle elects in SQL. The emitted pair set is
+# therefore {(rep, d): d in bucket, matches(sig_rep, sig_d) >= 8} DISTINCT.
+# The same 2-batch staging as the exact twin keeps the cross-batch proof:
+# at sf0.01 the mode's one emitted pair is (120, 332) with the stage split
+# at doc_id 248|252 — rep 120 is elected in batch 1, its match arrives in
+# batch 2.
 # ---------------------------------------------------------------------------
 def stream_neardup_reps_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
-    from templatedb_spark.streaming.neardup import (
-        read_documents_stream,
-        stream_neardup_pairs,
-    )
-
-    stage = tempfile.mkdtemp(prefix="ndr_stage_")
-    _stage_doc_microbatches(sf_dir, stage, n_batches=2)
-    name = f"gate_neardup_reps_{os.path.basename(stage).split('_')[-1]}"
-    q = (
-        stream_neardup_pairs(
-            read_documents_stream(spark, stage), mode="representatives"
-        )
-        .writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", _ckpt_dir())
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)  # memory sink holds the rows now
-    # same pair elected via several shared bands carries the same match
-    # count — distinct() collapses it (same contract as the exact twin)
-    return (
-        spark.table(name)
-        .select(
-            F.col("doc_a").cast("long").alias("doc_a"),
-            F.col("doc_b").cast("long").alias("doc_b"),
-            F.col("matches").cast("long").alias("matches"),
-        )
-        .distinct()
-    )
-
-
-def _neardup_reps_oracle() -> str:
-    from templatedb_spark.operators.dedup import (
-        _MINHASH_CTES,
-        _MINHASH_MATCH_MIN,
-    )
-
-    # reuse the slice + signature CTE chain of the exact-twin oracle, but
-    # replace its all-pairs cand/est tail with the election: per (band, mh)
-    # bucket the representative is MIN(doc_id), pairs are (rep, member)
-    ctes = _MINHASH_CTES.replace("FROM documents", "FROM docs_slice")
-    head, _, _ = ctes.partition("cand AS")  # keep sh/hs/perms/sig, drop cand/est
-    return f"""
-WITH docs_slice AS (
-  SELECT * FROM documents WHERE doc_id % {_NEARDUP_SLICE_MOD} = 0
-),
-{head}
-rep AS (SELECT i, mh, MIN(doc_id) AS rep_doc FROM sig GROUP BY i, mh),
-cand AS (SELECT DISTINCT r.rep_doc AS doc_a, s.doc_id AS doc_b
-         FROM sig s JOIN rep r ON s.i = r.i AND s.mh = r.mh AND s.doc_id > r.rep_doc),
-est AS (SELECT c.doc_a, c.doc_b,
-               SUM(CASE WHEN sa.mh = sb.mh THEN 1 ELSE 0 END) AS matches
-        FROM cand c
-        JOIN sig sa ON sa.doc_id = c.doc_a
-        JOIN sig sb ON sb.doc_id = c.doc_b AND sa.i = sb.i
-        GROUP BY 1, 2)
-SELECT doc_a, doc_b, matches::BIGINT AS matches
-FROM est WHERE matches >= {_MINHASH_MATCH_MIN}
-"""
+    return _neardup_gate(spark, sf_dir, "representatives")
 
 
 register(
     QuerySpec(
         "stream_neardup_reps",
         stream_neardup_reps_gate,
-        _neardup_reps_oracle(),
+        _neardup_oracle(election=True),
         "bounded-state streaming near-dup (representative election, 1 resident/bucket, 2 micro-batches) vs batch earliest-wins election oracle",
     )
 )
 
 
 # ---------------------------------------------------------------------------
-# Sixth gated spec (round 7, VERDICT r6 #5): compact_range under the oracle.
-# The CDC feed is written as THREE disjoint-key atomic versions (user_id % 3
-# routing — each key's full history lands in one version, so the multi-
-# version merge is exact regardless of apply order), then
-# compact_range("145", "155") collapses the in-range keys' history into one
-# base while out-of-range keys keep theirs. The audited invariant: the
-# merged state after a keyed-subrange compaction equals the whole-feed
-# net-effect compaction — the SAME oracle as the streaming CDC gate. Any
-# compact_range bug (key leaking across the range boundary, tombstone
-# resurrection, lost out-of-range history, manifest mis-publish) changes
-# the final state and hash-mismatches.
+# The two KV compaction chains. The CDC feed is written as THREE
+# disjoint-key atomic versions (key % 3 routing — each key's full history
+# lands in one version, so the multi-version merge is exact regardless of
+# apply order), then compact_range("145", "155") collapses the in-range
+# keys' history into one base while out-of-range keys keep theirs.
+#
+# kv_compact_range_state: the merged state after a keyed-subrange
+# compaction equals the whole-feed net-effect compaction — the SAME oracle
+# as the streaming CDC gate. Any compact_range bug (key leaking across the
+# range boundary, tombstone resurrection, lost out-of-range history,
+# manifest mis-publish) hash-mismatches.
+#
+# kv_range_layout_scan: the same feed on layout="range" — every version is
+# written as key-sorted, range-disjoint buckets whose smallest/largest are
+# recorded in the manifest (the LSM's sorted SSTable run + FileMetaData,
+# reference: src/storage_engine/src/sstable/table_builder.rs,
+# src/storage_engine/src/manager/version_edit.rs), so BOTH the compaction and
+# the final range scan prune at bucket granularity. The scan window
+# (142..152) straddles the compaction boundary (145): its result merges the
+# in-range compacted base, rewritten out-of-range history, AND
+# hardlink-cloned untouched buckets — a pruning bug on any of the three
+# hash-mismatches.
 # ---------------------------------------------------------------------------
-def kv_compact_range_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import shutil
-
+def _compacted_kv(spark: SparkSession, sf_dir: str, layout: str):
     from templatedb_spark.kv import KVTable
     from templatedb_spark.streaming.cdc import (
         changes_from_events,
@@ -673,16 +379,11 @@ def kv_compact_range_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from templatedb_spark.suite import table
 
-    kv_dir = tempfile.mkdtemp(prefix="cr_kv_")
-    atexit.register(shutil.rmtree, kv_dir, ignore_errors=True)
-    kv = KVTable(spark, kv_dir)
+    kv = KVTable(spark, result_dir(f"{layout}_kv_"), layout=layout)
     feed = changes_from_events(table(spark, sf_dir, "events"))
     # Per-key compaction commutes with disjoint-key routing, so the whole-feed
-    # net effect is computed ONCE and cached; the three atomic versions each
-    # read the (tiny: one row per key) cached relation instead of re-scanning
-    # and re-windowing the full feed per version (r9: the spec was the #1
-    # contended critical-path item in the bench lane — 3 feed compactions
-    # serialized behind each other for no semantic reason).
+    # net effect is computed ONCE and cached; the three versions each read
+    # the (one row per key) cached relation instead of re-windowing the feed.
     net_all = compact_net_effect(feed).select(
         "key",
         F.when(F.col("event_type") != "error", kv_value_col()).alias("value"),
@@ -691,16 +392,12 @@ def kv_compact_range_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("op"),
     ).cache()
     try:
-        # count() materializes the cache before the three writes AND gives
-        # the exact per-version row count, so each micro-version writes at
-        # a width matched to its size instead of the full bucket fan-out
-        # (r10 — see kv._write_version_df n_rows_hint; grows back to the
-        # full width as the feed grows).
+        # count() materializes the cache AND gives the exact per-version row
+        # count, so each version writes at a width matched to its size
+        # (kv._write_version_df n_rows_hint); the disjoint-key versions'
+        # write jobs run concurrently (kv.write_batches_df) — wall = the
+        # slowest write instead of the sum of three commit latencies
         per_version = (net_all.count() + 2) // 3
-        # the three versions hold DISJOINT key sets (user_id % 3 routing),
-        # so their write jobs run concurrently (kv.write_batches_df, guide
-        # §2.6) — wall = the slowest write instead of the sum of three
-        # serial commit latencies (VERDICT r10 #2)
         kv.write_batches_df(
             [
                 net_all.filter(F.col("key") % 3 == i).select(
@@ -713,13 +410,11 @@ def kv_compact_range_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         net_all.unpersist()
     kv.compact_range("145", "155")  # lexicographic: keys 1450-1549
-    snap = kv.snapshot()
-    parts = F.split(F.col("value"), r"\|", 2)
-    return snap.select(
-        F.col("key").cast("long").alias("key"),
-        parts.getItem(0).alias("event_type"),
-        parts.getItem(1).cast("double").alias("value"),
-    )
+    return kv
+
+
+def kv_compact_range_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _kv_state(_compacted_kv(spark, sf_dir, "hash").snapshot())
 
 
 register(
@@ -732,90 +427,15 @@ register(
 )
 
 
-# ---------------------------------------------------------------------------
-# Seventh gated spec (round 8): the KV RANGE layout end-to-end. Same CDC
-# feed, but the table is layout="range": every version is written as
-# key-sorted, range-disjoint buckets whose smallest/largest are recorded in
-# the manifest (the LSM's sorted SSTable run + FileMetaData,
-# reference: src/storage_engine/src/sstable/table_builder.rs,
-# src/storage_engine/src/manager/version_edit.rs) — so BOTH the keyed-
-# subrange compaction and the final range scan prune at bucket granularity
-# before any file is opened. The audited invariant: a pruned scan over
-# [start, end) on a range-layout table that was subrange-compacted equals
-# the whole-feed net-effect state restricted to the same key range. The
-# scan window (142..152) deliberately straddles the compaction boundary
-# (145): its result merges the in-range compacted base, rewritten
-# out-of-range history, AND hardlink-cloned untouched buckets — a pruning
-# bug on any of the three (bucket range mis-recorded after clone, footer
-# stats mis-harvested, boundary off-by-one in _range_intersects)
-# hash-mismatches.
-# ---------------------------------------------------------------------------
 def kv_range_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import shutil
-
-    from templatedb_spark.kv import KVTable
-    from templatedb_spark.streaming.cdc import (
-        changes_from_events,
-        compact_net_effect,
-        kv_value_col,
-    )
-    from templatedb_spark.suite import table
-
-    kv_dir = tempfile.mkdtemp(prefix="rl_kv_")
-    atexit.register(shutil.rmtree, kv_dir, ignore_errors=True)
-    kv = KVTable(spark, kv_dir, layout="range")
-    feed = changes_from_events(table(spark, sf_dir, "events"))
-    # one whole-feed compaction, cached, routed to 3 disjoint-key versions
-    # (same latency cut as kv_compact_range_state — see its comment)
-    net_all = compact_net_effect(feed).select(
-        "key",
-        F.when(F.col("event_type") != "error", kv_value_col()).alias("value"),
-        F.when(F.col("event_type") == "error", F.lit("del"))
-        .otherwise(F.lit("put"))
-        .alias("op"),
-    ).cache()
-    try:
-        # same width-matched CONCURRENT writes as kv_compact_range_state
-        # (disjoint key routing — see its comment; kv.write_batches_df)
-        per_version = (net_all.count() + 2) // 3
-        kv.write_batches_df(
-            [
-                net_all.filter(F.col("key") % 3 == i).select(
-                    F.col("key").cast("string").alias("key"), "value", "op"
-                )
-                for i in range(3)
-            ],
-            n_rows_hint=per_version,
-        )
-    finally:
-        net_all.unpersist()
-    kv.compact_range("145", "155")  # lexicographic: keys 1450-1549
-    snap = kv.scan(start="142", end="152")  # straddles the 1450 boundary
-    parts = F.split(F.col("value"), r"\|", 2)
-    return snap.select(
-        F.col("key").cast("long").alias("key"),
-        parts.getItem(0).alias("event_type"),
-        parts.getItem(1).cast("double").alias("value"),
-    )
+    kv = _compacted_kv(spark, sf_dir, "range")
+    return _kv_state(kv.scan(start="142", end="152"))  # straddles the 1450 boundary
 
 
-_KV_RANGE_SCAN_ORACLE = f"""
-WITH changes AS (
-  SELECT user_id + {CDC_KEY_OFFSET} AS key, ts, event_id, event_type, value
-  FROM events
-),
-latest AS (
-  SELECT key, event_type, value FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY key ORDER BY ts DESC, event_id DESC) AS rn
-    FROM changes
-  ) WHERE rn = 1
+# the CDC net-effect state restricted to the scan window
+_KV_RANGE_SCAN_ORACLE = (
+    _STREAM_CDC_ORACLE + "  AND key::VARCHAR >= '142' AND key::VARCHAR < '152'\n"
 )
-SELECT key::BIGINT AS key, event_type, value::DOUBLE AS value
-FROM latest
-WHERE event_type <> 'error'
-  AND key::VARCHAR >= '142' AND key::VARCHAR < '152'
-"""
 
 register(
     QuerySpec(
@@ -828,32 +448,25 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Eighth gated spec (round 8): bounded-state streaming EXACT dedup on ingest
-# — Spark's native dropDuplicatesWithinWatermark (streaming/ingest.py), the
-# production ingest-dedup shape whose state is bounded by the watermark
-# horizon instead of the corpus. The synthetic corpus has no exact twins, so
-# the stager deterministically injects them: every doc_id % 50 == 0 gains a
-# verbatim clone (+10000) and every doc_id % 70 == 0 a whitespace variant
-# (+20000, ' ' -> '  ' — same fingerprint after normalization, which puts
-# the Spark-vs-DuckDB normalization parity itself under the gate). Batch
-# routing is by rank within fingerprint group (i-th copy -> micro-batch i),
-# so EVERY duplicate pair straddles a micro-batch boundary by construction —
-# a green row proves cross-batch state suppression for all 18 groups, not
-# one sentinel pair. The oracle reconstructs the same augmented corpus in
-# SQL and elects min(doc_id) per fingerprint; any admitted duplicate is a
-# row-count mismatch, any wrong survivor a hash mismatch.
+# Bounded-state streaming EXACT dedup on ingest — Spark's native
+# dropDuplicatesWithinWatermark (streaming/ingest.py), whose state is bounded
+# by the watermark horizon instead of the corpus. The synthetic corpus has
+# no exact twins, so the stager deterministically injects them: every
+# doc_id % 50 == 0 gains a verbatim clone (+10000) and every doc_id % 70 == 0
+# a whitespace variant (+20000, ' ' -> '  ' — same fingerprint after
+# normalization, which puts the Spark-vs-DuckDB normalization parity itself
+# under the gate). Batch routing is by rank within fingerprint group (i-th
+# copy -> micro-batch i), so EVERY duplicate pair straddles a micro-batch
+# boundary by construction. The oracle reconstructs the same augmented
+# corpus in SQL and elects min(doc_id) per fingerprint; any admitted
+# duplicate is a row-count mismatch, any wrong survivor a hash mismatch.
 # ---------------------------------------------------------------------------
-def _stage_ingest_microbatches(sf_dir: str, out_dir: str, n_batches: int = 2) -> None:
-    """Augment documents with deterministic dup tiers and stage each
-    fingerprint's i-th copy into micro-batch i (pandas rank routing — the
-    normalization here only decides ROUTING; the audited fingerprint parity
-    is Spark-vs-DuckDB, both of which compute md5 over their own
-    regexp_replace)."""
-    import os
-
+def _stage_ingest(sf_dir: str, out_dir: str, n_batches: int = 2) -> None:
+    """Augment documents with the dup tiers and stage each fingerprint's
+    i-th copy into micro-batch i (the normalization here only decides
+    ROUTING; the audited fingerprint parity is Spark-vs-DuckDB)."""
     import pandas as pd
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     df = pq.read_table(
         f"{sf_dir}/documents.parquet", columns=["doc_id", "text"]
@@ -870,42 +483,29 @@ def _stage_ingest_microbatches(sf_dir: str, out_dir: str, n_batches: int = 2) ->
     )
     norm = aug["text"].str.lower().str.replace(r"\s+", " ", regex=True)
     aug["batch_idx"] = aug.groupby(norm).cumcount().clip(upper=n_batches - 1)
-    for i in range(n_batches):
-        part = aug[aug.batch_idx == i][["doc_id", "text", "batch_idx"]]
-        p = f"{out_dir}/part-{i}.parquet"
-        pq.write_table(pa.Table.from_pandas(part, preserve_index=False), p)
-        os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
+    write_parts(
+        [
+            pa.Table.from_pandas(
+                aug[aug.batch_idx == i][["doc_id", "text", "batch_idx"]],
+                preserve_index=False,
+            )
+            for i in range(n_batches)
+        ],
+        out_dir,
+    )
 
 
 def stream_dedup_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from templatedb_spark.streaming.ingest import stream_dedup_ingest
     from templatedb_spark.streaming.neardup import read_documents_stream
 
-    stage = tempfile.mkdtemp(prefix="ing_stage_")
-    _stage_ingest_microbatches(sf_dir, stage)
-    name = f"gate_ingest_{os.path.basename(stage).split('_')[-1]}"
-    s2 = _stream_session(spark, stage)
-    # dropDuplicatesWithinWatermark emits every FIRST-SEEN row eagerly in
-    # its data batch; the trailing no-data batch only evicts expired state
-    # (discarded after this one-shot drain). Skipping it saves a full
-    # trigger+commit round (~0.2 s of a ~1.1 s drain, stream_probe r11)
-    # with the sink rows unchanged — same argument as the interval-join
-    # gate; oracle-gated.
-    s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    q = (
-        stream_dedup_ingest(read_documents_stream(s2, stage))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)  # memory sink holds the rows now
-    return s2.table(name)
+    with drain(spark, "ingest", "jvm_state", lambda out: _stage_ingest(sf_dir, out)) as d:
+        # dropDuplicatesWithinWatermark emits every FIRST-SEEN row eagerly in
+        # its data batch; the trailing no-data batch only evicts state this
+        # one-shot drain discards (~0.2 s of a ~1.1 s drain, r11) — same
+        # argument as the interval-join gate; sink rows unchanged
+        d.session.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+        return d.run(stream_dedup_ingest(read_documents_stream(d.session, d.stage)))
 
 
 _INGEST_DEDUP_ORACLE = r"""
@@ -932,96 +532,52 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Ninth gated spec: WATERMARKED EVENT-TIME WINDOW AGGREGATION with a provably
-# dropped late row — the canonical Structured Streaming operator (append-mode
-# tumbling window) that the other gates exercise only indirectly. Two
-# contracts are under the oracle at once:
+# WATERMARKED EVENT-TIME WINDOW AGGREGATION with a provably dropped late
+# row — the canonical append-mode tumbling window. Two contracts are under
+# the oracle at once:
 #
 #   1. **Append-mode emission**: a window is emitted exactly once, when the
 #      watermark passes its end. After the availableNow drain the final
 #      watermark is max(ts) - 10min, so the sink holds precisely the windows
-#      with window_end <= max(ts) - 10min (the trailing ~10min of windows
-#      stay open in state, unemitted). The oracle applies the same cutoff in
-#      SQL. (Boundary safety: verified at sf0.001/0.01/0.1/sf1 that no
+#      with window_end <= max(ts) - 10min. The oracle applies the same cutoff
+#      in SQL. (Boundary safety: verified at sf0.001/0.01/0.1/sf1 that no
 #      hour-aligned window end coincides with the cutoff instant, so <= vs <
 #      eviction semantics cannot flip a window across engines.)
 #   2. **Late-data drop**: the stager moves the globally EARLIEST event (min
 #      (ts, event_id)) from micro-batch 1 to the END of micro-batch 3. When
 #      batch 3 runs, the watermark is already maxTs(batches 1-2) - 10min —
-#      ~20 days past that row's window — so the row MUST be discarded, and
-#      its window was already finalized without it after batch 1/2. The
-#      oracle excludes exactly that one row (ROW_NUMBER()=1 over (ts,
-#      event_id)); an engine that fails to drop it (or drops anything else)
-#      hash-mismatches on that window's aggregates.
+#      ~20 days past that row's window — so the row MUST be discarded. The
+#      oracle excludes exactly that one row; an engine that fails to drop it
+#      (or drops anything else) hash-mismatches on that window's aggregates.
 #
 # Aggregates are integer-exact (count, sum(user_id), min/max(event_id)) so
-# the comparison is bit-deterministic regardless of partition order — no
-# float sums in a hash-compared streaming gate.
-#
-# Scale: this is THE bounded-state firehose shape — state is O(active
-# windows x event types) regardless of corpus size, late stragglers are
-# dropped at the operator instead of growing state, and each trigger is a
-# partial+final hash agg. Reference parity: the reference has no streaming
-# tier (SURVEY.md §2.9 extension); the batch twin is `events_rollup`.
+# the comparison is bit-deterministic regardless of partition order. The
+# batch twin is `events_rollup`.
 # ---------------------------------------------------------------------------
-def _stage_late_microbatches(sf_dir: str, out_dir: str, n_batches: int = 3) -> None:
-    """ts-ordered 3-way split of events, with the globally earliest row
-    (min (ts, event_id)) moved from batch 1 to the tail of the last batch —
-    the deterministic late straggler."""
-    import os
+def _stage_late(sf_dir: str, out_dir: str, n_batches: int = 3) -> None:
+    """ts-ordered split of events, with the globally earliest row moved from
+    batch 1 to the tail of the last batch — the deterministic late straggler.
 
+    3 batches, NOT the 2-trigger default: the watermark used to filter batch
+    k's input is computed from stats through batch k-2 (a straggler at the
+    tail of batch 1 of 2 SURVIVES), so the provably-dropped straggler needs
+    at least 3 batches: wm(batch 2) = max_ts(batch 0) - 10min."""
     import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    # 3 batches, NOT the 2-trigger default: the watermark used to filter
-    # batch k's input is computed from stats through batch k-2 (measured
-    # this round — a straggler at the tail of batch 1 of 2 SURVIVES because
-    # batch 1 still runs with the initial watermark; only at batch 2 does
-    # batch 0's max event time take effect). The provably-dropped straggler
-    # therefore needs at least 3 batches: wm(batch 2) = max_ts(batch 0) - 10min.
     t = pq.read_table(f"{sf_dir}/events.parquet")
-    order = pc.sort_indices(
-        t, sort_keys=[("ts", "ascending"), ("event_id", "ascending")]
-    )
-    t = t.take(order)
-    late = t.slice(0, 1)  # the global (ts, event_id) minimum
-    rest = t.slice(1)
-    n = rest.num_rows
-    step = (n + n_batches - 1) // n_batches
-    for i in range(n_batches):
-        part = rest.slice(i * step, step)
-        if i == n_batches - 1:
-            part = pa.concat_tables([part, late])
-        p = f"{out_dir}/part-{i}.parquet"
-        pq.write_table(part, p)
-        os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
+    t = t.take(pc.sort_indices(t, sort_keys=[(c, "ascending") for c in _EVENT_ORDER]))
+    late, rest = t.slice(0, 1), t.slice(1)
+    step = (rest.num_rows + n_batches - 1) // n_batches
+    parts = [rest.slice(i * step, step) for i in range(n_batches)]
+    parts[-1] = pa.concat_tables([parts[-1], late])
+    write_parts(parts, out_dir)
 
 
 def stream_window_late(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
+    from templatedb_spark.streaming.events import read_events_stream, windowed_exact_rollup
 
-    from templatedb_spark.streaming.events import (
-        read_events_stream,
-        windowed_exact_rollup,
-    )
-
-    stage = tempfile.mkdtemp(prefix="winlate_stage_")
-    _stage_late_microbatches(sf_dir, stage)
-    name = f"gate_winlate_{os.path.basename(stage).split('_')[-1]}"
-    s2 = _stream_session(spark, stage)
-    agg = windowed_exact_rollup(read_events_stream(s2, stage))
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)  # memory sink holds the rows now
-    return s2.table(name)
+    with drain(spark, "winlate", "jvm_state", lambda out: _stage_late(sf_dir, out)) as d:
+        return d.run(windowed_exact_rollup(read_events_stream(d.session, d.stage)))
 
 
 _STREAM_WINDOW_LATE_ORACLE = """
@@ -1052,66 +608,38 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Tenth gated spec: STREAM-STATIC broadcast enrichment — the third join
-# shape Structured Streaming supports (after stream-stream, gated above, and
-# the batch tier's joins): every micro-batch of the event stream joins a
-# STATIC dimension (customer) that Spark re-resolves and broadcasts per
-# trigger. This is the canonical firehose-enrichment topology at 100 TB —
-# the dim is small and broadcast, the stream never shuffles on the join key,
-# and no join state accumulates (unlike stream-stream, there is nothing to
-# watermark: matches are complete within each micro-batch by definition).
-#
-# The gate drains 2 ts-ordered micro-batches through the enrichment join in
-# append mode (raw enriched rows — no streaming agg, so nothing is held
-# back), then rolls the sink up as BATCH per (mktsegment, event_type); the
-# oracle is the same inner join + rollup over the whole feed. A divergence
-# in per-batch dim resolution, join semantics, or row loss across triggers
-# is a count/hash mismatch. Aggregates are integer-exact.
+# STREAM-STATIC broadcast enrichment — the third join shape Structured
+# Streaming supports: every micro-batch of the event stream joins a STATIC
+# dimension (customer) that Spark re-resolves and broadcasts per trigger.
+# The dim is small and broadcast, the stream never shuffles on the join key,
+# and no join state accumulates (matches are complete within each
+# micro-batch by definition). The drained rows are rolled up as BATCH per
+# (mktsegment, event_type); the oracle is the same inner join + rollup over
+# the whole feed. A divergence in per-batch dim resolution, join semantics,
+# or row loss across triggers is a count/hash mismatch.
 # ---------------------------------------------------------------------------
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from templatedb_spark.streaming.events import read_events_stream
     from templatedb_spark.suite import table
 
-    import atexit
-
-    stage = tempfile.mkdtemp(prefix="enrich_stage_")
-    _stage_microbatches(sf_dir, stage)
-    name = f"gate_enrich_{os.path.basename(stage).split('_')[-1]}"
-    s2 = _stream_session(spark, stage)
-    # the static dim must come from the SAME session as the stream side
-    dim = F.broadcast(
-        table(s2, sf_dir, "customer").select(
-            F.col("c_custkey").alias("user_id"), "c_mktsegment", "c_nationkey"
-        )
-    )
-    enriched = (
-        read_events_stream(s2, stage)
-        .join(dim, "user_id")  # stream-static inner join, broadcast per trigger
-        .select("event_id", "user_id", "event_type", "c_mktsegment", "c_nationkey")
-    )
     # parquet FILE sink, not memory: enriched rows are corpus-sized (1:1 with
     # the stream), so the sink must stay off the driver — the memory sink
-    # OOMed the sf10 engine probe at 10M rows, the exactly-once file sink
-    # ships them executor-side (the production enrichment topology end to
-    # end). The rollup then reads the committed files as batch.
-    sink = tempfile.mkdtemp(prefix="enrich_sink_")
-    ckpt = _ckpt_dir()  # tmpfs: the drain deletes it right after (see _ckpt_dir)
-    atexit.register(shutil.rmtree, sink, ignore_errors=True)
-    q = (
-        enriched.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    # OOMed the sf10 engine probe at 10M rows. The rollup then reads the
+    # committed files as batch.
+    sink = result_dir("enrich_sink_")
+    with drain(spark, "enrich", "jvm_state", _stage_events(sf_dir)) as d:
+        # the static dim must come from the SAME session as the stream side
+        dim = F.broadcast(
+            table(d.session, sf_dir, "customer").select(
+                F.col("c_custkey").alias("user_id"), "c_mktsegment", "c_nationkey"
+            )
+        )
+        enriched = (
+            read_events_stream(d.session, d.stage)
+            .join(dim, "user_id")  # stream-static inner join, broadcast per trigger
+            .select("event_id", "user_id", "event_type", "c_mktsegment", "c_nationkey")
+        )
+        d.run(enriched, "parquet", path=sink)
     return (
         spark.read.parquet(sink)
         .groupBy("c_mktsegment", "event_type")
@@ -1147,22 +675,16 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Eleventh gated spec: MERGEABLE-SKETCH STREAMING STATE — the deterministic
-# HyperLogLog register vector maintained across micro-batches. This is the
-# species of streaming state none of the other gates exercise: not rows, not
-# per-key latest, but a BOUNDED commutative monoid (64 registers merged by
-# elementwise max). Each micro-batch computes its partial register vector
-# distributed (the same hll_partial_registers the batch spec uses), and
-# foreachBatch folds it into a KV-persisted vector under an exactly-once
-# batch tag. Because max-merge is associative/commutative and the register
-# derivation is md5-deterministic, the drained vector must be BIT-IDENTICAL
-# to the batch spec's single-pass vector — so the oracle is the batch HLL
-# oracle itself, fingerprint and all. A wrong merge, a lost batch, or a
-# double-applied replay flips the registers_fp hash.
-#
-# Driver-side state here is 64 longs per trigger (two ≤64-row collects) —
-# bounded by the sketch's m, never by the corpus; that boundedness is the
-# entire point of sketch-shaped state at 100 TB.
+# MERGEABLE-SKETCH STREAMING STATE — the deterministic HyperLogLog register
+# vector maintained across micro-batches: a BOUNDED commutative monoid (64
+# registers merged by elementwise max). Each micro-batch computes its
+# partial register vector distributed (the same hll_partial_registers the
+# batch spec uses), and foreachBatch folds it into a KV-persisted vector
+# under an exactly-once batch tag. Because max-merge is associative and
+# commutative and the register derivation is md5-deterministic, the drained
+# vector must be BIT-IDENTICAL to the batch spec's — so the oracle is the
+# batch HLL oracle itself. A wrong merge, a lost batch, or a double-applied
+# replay flips the registers_fp hash. Driver state is 64 longs per trigger.
 # ---------------------------------------------------------------------------
 def _hll_apply(spark, kv, cache: dict, qname: str, batch_df, batch_id: int) -> None:
     """Per-trigger HLL max-merge into KV under an exactly-once tag — the
@@ -1179,13 +701,9 @@ def _hll_apply(spark, kv, cache: dict, qname: str, batch_df, batch_id: int) -> N
     if not partial:
         return
     if cache["cur"] is None:
-        cache["cur"] = {
-            int(r.key): int(r.value) for r in kv.snapshot().collect()
-        }
+        cache["cur"] = {int(r.key): int(r.value) for r in kv.snapshot().collect()}
     cur = cache["cur"]
-    bumps = {
-        reg: m for reg, m in partial.items() if m > cur.get(reg, -1)
-    }
+    bumps = {reg: m for reg, m in partial.items() if m > cur.get(reg, -1)}
     if not bumps:
         return
     rows = [(f"{reg:02d}", str(m), "put") for reg, m in sorted(bumps.items())]
@@ -1200,42 +718,20 @@ def _hll_apply(spark, kv, cache: dict, qname: str, batch_df, batch_id: int) -> N
 
 
 def stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import shutil
-
     from templatedb_spark.kv import KVTable
-    from templatedb_spark.operators.textstats import (
-        hll_fill_registers,
-        hll_finalize,
-    )
+    from templatedb_spark.operators.textstats import hll_fill_registers, hll_finalize
     from templatedb_spark.streaming.events import read_events_stream
     from templatedb_spark.suite import table
 
-    stage = tempfile.mkdtemp(prefix="hll_stage_")
+    kv = KVTable(spark, result_dir("hll_kv_"))
+    cache: dict = {"cur": None}  # committed-state cache: see _hll_apply
     # 2 triggers = the semantic minimum for a cross-batch merge (batch 1
-    # max-merges into batch 0's committed registers); the third trigger
-    # proved nothing extra and was ~1/3 of this serial chain's wall clock
-    # (VERDICT r6 #4's fewer-larger-micro-batches lever).
-    _stage_microbatches(sf_dir, stage, n_batches=2)
-    kv_dir = tempfile.mkdtemp(prefix="hll_kv_")
-    atexit.register(shutil.rmtree, kv_dir, ignore_errors=True)
-    kv = KVTable(spark, kv_dir)
-    qname = f"gate_hll_{abs(hash(stage))}"
-
-    # committed-state cache: see _hll_apply
-    cache: dict = {"cur": None}
-
-    q = (
-        read_events_stream(_stream_session(spark, stage), stage)
-        .writeStream.foreachBatch(
-            lambda bdf, bid: _hll_apply(spark, kv, cache, qname, bdf, bid)
+    # max-merges into batch 0's committed registers)
+    with drain(spark, "hll", "jvm_state", _stage_events(sf_dir, 2)) as d:
+        d.run(
+            read_events_stream(d.session, d.stage),
+            lambda bdf, bid: _hll_apply(spark, kv, cache, d.name, bdf, bid),
         )
-        .queryName(qname)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)
     regs = kv.snapshot().select(
         F.col("key").cast("long").alias("reg"),
         F.col("value").cast("long").alias("m"),
@@ -1264,39 +760,16 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Twelfth gated spec: COUNTER-SKETCH STREAMING STATE (Count-Min over the
-# document token stream). The companion to stream_hll_users with the
-# opposite algebra: HLL registers merge by MAX (idempotent — a replayed
-# merge is harmless), CMS cells merge by SUM (NOT idempotent — a replayed
-# micro-batch double-counts and corrupts every estimate). So this gate is
-# the end-to-end proof that the KV's exactly-once batch tags are
-# load-bearing: drain the corpus in 2 micro-batches, sum each batch's
+# COUNTER-SKETCH STREAMING STATE (Count-Min over the document token stream),
+# the companion to stream_hll_users with the opposite algebra: HLL registers
+# merge by MAX (idempotent — a replayed merge is harmless), CMS cells merge
+# by SUM (NOT idempotent — a replayed micro-batch double-counts and corrupts
+# every estimate). So this gate is the end-to-end proof that the KV's
+# exactly-once batch tags are load-bearing: each of 2 micro-batches sums its
 # 4x8-cell partial sketch into the KV under a (query, batch_id) tag, then
-# estimate the top-20 heavy hitters from the merged sketch. The oracle is
-# the batch CMS oracle verbatim — any duplicate apply, lost batch, or wrong
-# sum shifts cms_n/overestimate and hash-mismatches.
-#
-# Driver state per trigger: d*w = 32 cells (two <=32-row collects) — bounded
-# by the sketch dimensions, never the corpus.
+# the top-20 heavy hitters are estimated from the merged sketch. The oracle
+# is the batch CMS oracle verbatim. Driver state per trigger: 32 cells.
 # ---------------------------------------------------------------------------
-def _stage_full_doc_microbatches(sf_dir: str, out_dir: str, n_batches: int = 2) -> None:
-    """doc_id-ordered N-way split of the raw documents table (full corpus —
-    unlike the near-dup stagers there is no slice and no augmentation)."""
-    import os
-
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
-    t = t.take(pc.sort_indices(t, sort_keys=[("doc_id", "ascending")]))
-    n = t.num_rows
-    step = (n + n_batches - 1) // n_batches
-    for i in range(n_batches):
-        p = f"{out_dir}/part-{i}.parquet"
-        pq.write_table(t.slice(i * step, step), p)
-        os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
-
-
 def _cms_cell_structs():
     from templatedb_spark.functions.hashing import h32
     from templatedb_spark.operators.textstats import _CMS_D, _CMS_W
@@ -1362,37 +835,25 @@ def _cms_apply(spark, kv, cache: dict, qname: str, batch_df, batch_id: int) -> N
 
 
 def stream_cms_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import shutil
-
     from templatedb_spark.kv import KVTable
+    from templatedb_spark.operators.dedup import tokenized
     from templatedb_spark.operators.textstats import _CMS_K
     from templatedb_spark.streaming.neardup import read_documents_stream
-    from templatedb_spark.suite import table
 
-    stage = tempfile.mkdtemp(prefix="cms_stage_")
+    kv = KVTable(spark, result_dir("cms_kv_"))
+    cache: dict = {"cur": None}  # committed-state cache: see _cms_apply
+
+    def stage(out: str) -> None:  # the full corpus, doc_id-ordered
+        docs = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
+        stage_slices(docs, out, 2, ["doc_id"])
+
     # 2 triggers: minimum that proves the SUM-merge reads committed state
-    # (and that a replayed tag cannot double-count) — see stream_hll_users
-    _stage_full_doc_microbatches(sf_dir, stage, n_batches=2)
-    kv_dir = tempfile.mkdtemp(prefix="cms_kv_")
-    atexit.register(shutil.rmtree, kv_dir, ignore_errors=True)
-    kv = KVTable(spark, kv_dir)
-    qname = f"gate_cms_{abs(hash(stage))}"
-
-    # committed-state cache: see _cms_apply
-    cache: dict = {"cur": None}
-
-    q = (
-        read_documents_stream(_stream_session(spark, stage), stage)
-        .writeStream.foreachBatch(
-            lambda bdf, bid: _cms_apply(spark, kv, cache, qname, bdf, bid)
+    # (and that a replayed tag cannot double-count)
+    with drain(spark, "cms", "jvm_state", stage) as d:
+        d.run(
+            read_documents_stream(d.session, d.stage),
+            lambda bdf, bid: _cms_apply(spark, kv, cache, d.name, bdf, bid),
         )
-        .queryName(qname)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)
     sketch = kv.snapshot().select(
         F.split(F.col("key"), ":").getItem(0).cast("int").alias("j"),
         F.split(F.col("key"), ":").getItem(1).cast("int").alias("b"),
@@ -1402,8 +863,6 @@ def stream_cms_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the batch spec) — the streamed, audited artifact is the sketch itself.
     # Reuse the suite-wide CACHED tokenized relation (operators/dedup) so
     # this pass costs a cache read, not a third full-corpus tokenization.
-    from templatedb_spark.operators.dedup import tokenized
-
     tok = tokenized(spark, sf_dir).select(F.explode("t").alias("tok"))
     tf = tok.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("n"))
     cand = tf.orderBy(F.col("n").desc(), F.col("tok").asc()).limit(_CMS_K)
@@ -1442,68 +901,55 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Thirteenth gated spec: STREAMING MATERIALIZED JOIN VIEW — the production
-# pattern that ties this round's machinery together. A materialized rollup
-# over orders JOIN customer is maintained INCREMENTALLY from an order
-# stream: each micro-batch dA contributes dA ⋈ B (B static, broadcast per
-# trigger — no stream shuffle, no join state), the delta rollup SUM-merges
-# into the KV-persisted view state under an exactly-once batch tag, and the
-# final state must equal the full-recompute oracle (the same SQL as the
-# batch mv_join_delta spec). This composes: stream-static join + delta
-# propagation + non-idempotent merge + transactional sink — a replayed or
-# lost batch, a wrong delta term, or a float-unsafe merge all flip the hash.
-# Money sums ride java.math-free: per-batch rollups are DECIMAL(12,2), the
-# merge accumulates in Python Decimal (exact), and only the final output
-# casts to DOUBLE — the same order-independence rule as the batch specs.
-#
-# Driver state per trigger is O(view group cardinality) (15 rows here —
-# two bounded collects); a view keyed wider than the driver swaps the merge
-# for the fully distributed KVTable.write_batch_df path the CDC gate uses,
-# same tags, same contract.
+# STREAMING MATERIALIZED JOIN VIEW. A materialized rollup over orders JOIN
+# customer is maintained INCREMENTALLY from an order stream: each
+# micro-batch dA contributes dA ⋈ B (B static, broadcast per trigger — no
+# stream shuffle, no join state), the delta rollup SUM-merges into the
+# KV-persisted view state under an exactly-once batch tag, and the final
+# state must equal the full-recompute oracle (the same SQL as the batch
+# mv_join_delta spec). A replayed or lost batch, a wrong delta term, or a
+# float-unsafe merge all flip the hash. Money sums are exact: per-batch
+# rollups are DECIMAL(12,2), the merge accumulates in Python Decimal, and
+# only the final output casts to DOUBLE. Driver state per trigger is
+# O(view group cardinality) (15 rows here); a view keyed wider than the
+# driver uses the fully distributed merge of stream_mv_join_wide below.
 # ---------------------------------------------------------------------------
-def _stage_order_microbatches(sf_dir: str, out_dir: str, n_batches: int = 2) -> None:
-    """o_orderkey-ordered N-way split of orders (the arriving fact deltas)."""
-    import os
+def _stage_orders(sf_dir: str):
+    """Stager: orders as 2 o_orderkey-ordered micro-batches (the arriving
+    fact deltas). 2 triggers: the cross-batch delta merge is proven by batch
+    1 summing into batch 0's committed view."""
+    return lambda out: stage_slices(
+        pq.read_table(f"{sf_dir}/orders.parquet"), out, 2, ["o_orderkey"]
+    )
 
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    t = pq.read_table(f"{sf_dir}/orders.parquet")
-    t = t.take(pc.sort_indices(t, sort_keys=[("o_orderkey", "ascending")]))
-    n = t.num_rows
-    step = (n + n_batches - 1) // n_batches
-    for i in range(n_batches):
-        p = f"{out_dir}/part-{i}.parquet"
-        pq.write_table(t.slice(i * step, step), p)
-        os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
+def _mv_view(kv, key2: str, key2_type: str) -> DataFrame:
+    """The view's KV rows `c_mktsegment|key2 -> n|revenue` as output columns."""
+    parts = F.split(F.col("key"), r"\|", 2)
+    vals = F.split(F.col("value"), r"\|", 2)
+    return kv.snapshot().select(
+        parts.getItem(0).alias("c_mktsegment"),
+        parts.getItem(1).cast(key2_type).alias(key2),
+        vals.getItem(0).cast("long").alias("n_orders"),
+        vals.getItem(1).cast("decimal(38,2)").cast("double").alias("revenue"),
+    )
 
 
 def stream_mv_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import shutil
     from decimal import Decimal
 
-    from templatedb_spark.kv import KVTable
+    from templatedb_spark.kv import KVTable, local_df
     from templatedb_spark.suite import table
 
-    stage = tempfile.mkdtemp(prefix="mvj_stage_")
-    # 2 triggers: the cross-batch delta merge is proven by batch 1 summing
-    # into batch 0's committed view (same lever as the sketch gates)
-    _stage_order_microbatches(sf_dir, stage, n_batches=2)
-    kv_dir = tempfile.mkdtemp(prefix="mvj_kv_")
-    atexit.register(shutil.rmtree, kv_dir, ignore_errors=True)
-    kv = KVTable(spark, kv_dir)
-    qname = f"gate_mvj_{abs(hash(stage))}"
-
+    kv = KVTable(spark, result_dir("mvj_kv_"))
     dim = F.broadcast(
         table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     )
-
     # committed-state cache (see the HLL/CMS gates): KV re-read only on
     # (re)start; tag check first so a replay can never reach the cache
     cache: dict = {"cur": None}
 
-    def apply_batch(batch_df, batch_id: int) -> None:
+    def apply_batch(batch_df, batch_id: int, qname: str) -> None:
         if kv.has_tag(f"{qname}:b{batch_id}"):
             return  # replayed batch: already committed, cache untouched
         delta = (
@@ -1531,35 +977,18 @@ def stream_mv_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             n0, rev0 = cur.get(key, (0, Decimal("0")))
             cur[key] = (n0 + dn, rev0 + drev)
             rows.append((f"{key[0]}|{key[1]}", f"{cur[key][0]}|{cur[key][1]}", "put"))
-        from templatedb_spark.kv import local_df
-
         kv.write_batch_df(
             local_df(spark, rows, "key string, value string, op string"),
             tag=f"{qname}:b{batch_id}",  # SUM-merge: replay would double-count
             n_rows_hint=len(rows),
         )
 
-    schema = spark.read.parquet(f"{sf_dir}/orders.parquet").schema
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .writeStream.foreachBatch(apply_batch)
-        .queryName(qname)
-        .option("checkpointLocation", _ckpt_dir())  # tmpfs: see _ckpt_dir
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)
-    parts = F.split(F.col("key"), r"\|", 2)
-    vals = F.split(F.col("value"), r"\|", 2)
-    return kv.snapshot().select(
-        parts.getItem(0).alias("c_mktsegment"),
-        parts.getItem(1).alias("o_orderstatus"),
-        vals.getItem(0).cast("long").alias("n_orders"),
-        vals.getItem(1).cast("decimal(38,2)").cast("double").alias("revenue"),
-    )
+    with drain(spark, "mvj", "ambient", _stage_orders(sf_dir)) as d:
+        d.run(
+            _orders_stream(d.session, sf_dir, d.stage),
+            lambda bdf, bid: apply_batch(bdf, bid, d.name),
+        )
+    return _mv_view(kv, "o_orderstatus", "string")
 
 
 _STREAM_MV_JOIN_ORACLE = """
@@ -1581,19 +1010,17 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Fourteenth gated spec: WIDE-KEY streaming materialized JOIN view — the
-# FULLY DISTRIBUTED merge stream_mv_join's docstring promises for views keyed
-# wider than the driver. The view is keyed by (c_mktsegment, o_custkey) —
-# every customer, not 15 rollup groups — so the per-trigger merge must never
-# collect: each micro-batch's delta rollup LEFT-JOINs the KV snapshot on the
-# view key (executor-side merge-on-read), sums counts as BIGINT and revenue
-# as DECIMAL(38,2) (exact, partitioning-independent), and the merged rows
+# WIDE-KEY streaming materialized JOIN view — the FULLY DISTRIBUTED merge
+# for views keyed wider than the driver. The view is keyed by
+# (c_mktsegment, o_custkey) — every customer, not 15 rollup groups — so the
+# per-trigger merge must never collect: each micro-batch's delta rollup
+# LEFT-JOINs the KV snapshot on the view key (executor-side merge-on-read),
+# sums counts as BIGINT and revenue as DECIMAL(38,2), and the merged rows
 # flow shuffle→parquet through write_batch_df under an exactly-once batch
-# tag. Driver state per trigger: ZERO rows — the contract that survives a
-# view keyed by user_id at 100 TB. A replayed batch would double-count (the
-# SUM-merge is non-idempotent), so the tag is correctness, not hygiene; and
-# the o_orderkey-ordered 2-way split puts nearly every custkey in BOTH
-# batches, so a merge that failed to read prior state flips the hash.
+# tag. Driver state per trigger: ZERO rows. A replayed batch would
+# double-count, so the tag is correctness, not hygiene; and the
+# o_orderkey-ordered 2-way split puts nearly every custkey in BOTH batches,
+# so a merge that failed to read prior state flips the hash.
 # ---------------------------------------------------------------------------
 def _mvjw_apply(kv, dim: DataFrame, batch_df: DataFrame, tag: str) -> None:
     """One micro-batch of the wide-key view: broadcast-join the delta, roll it
@@ -1639,48 +1066,20 @@ def _mvjw_apply(kv, dim: DataFrame, batch_df: DataFrame, tag: str) -> None:
 
 
 def stream_mv_join_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import shutil
-
     from templatedb_spark.kv import KVTable
     from templatedb_spark.suite import table
 
-    stage = tempfile.mkdtemp(prefix="mvjw_stage_")
-    _stage_order_microbatches(sf_dir, stage, n_batches=2)
-    kv_dir = tempfile.mkdtemp(prefix="mvjw_kv_")
-    atexit.register(shutil.rmtree, kv_dir, ignore_errors=True)
-    kv = KVTable(spark, kv_dir)
-    qname = f"gate_mvjw_{abs(hash(stage))}"
-
-    # stream + dim + batch plans all live in the state-store-sized clone
-    s2 = _stream_session(spark, stage)
-    dim = F.broadcast(
-        table(s2, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    )
-
-    def apply_batch(batch_df, batch_id: int) -> None:
-        _mvjw_apply(kv, dim, batch_df, f"{qname}:b{batch_id}")
-
-    schema = s2.read.parquet(f"{sf_dir}/orders.parquet").schema
-    q = (
-        s2.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .writeStream.foreachBatch(apply_batch)
-        .queryName(qname)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)
-    parts = F.split(F.col("key"), r"\|", 2)
-    vals = F.split(F.col("value"), r"\|", 2)
-    return kv.snapshot().select(
-        parts.getItem(0).alias("c_mktsegment"),
-        parts.getItem(1).cast("long").alias("o_custkey"),
-        vals.getItem(0).cast("long").alias("n_orders"),
-        vals.getItem(1).cast("decimal(38,2)").cast("double").alias("revenue"),
-    )
+    kv = KVTable(spark, result_dir("mvjw_kv_"))
+    with drain(spark, "mvjw", "jvm_state", _stage_orders(sf_dir)) as d:
+        # stream + dim + batch plans all live in the state-store-sized clone
+        dim = F.broadcast(
+            table(d.session, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+        )
+        d.run(
+            _orders_stream(d.session, sf_dir, d.stage),
+            lambda bdf, bid: _mvjw_apply(kv, dim, bdf, f"{d.name}:b{bid}"),
+        )
+    return _mv_view(kv, "o_custkey", "long")
 
 
 _STREAM_MV_JOIN_WIDE_ORACLE = """

@@ -115,39 +115,21 @@ def all_specs() -> dict[str, QuerySpec]:
     # CORRECTNESS_r09.json: retired.)
     # (Driver-round-10 churn — the re-oracled ANN nprobe ladder — is fully
     # recorded in CORRECTNESS_r10.json: retired.)
-    # Driver-round-11 fronting (VERDICT r10 #1): every spec whose
-    # IMPLEMENTATION was rewritten in the round-10 optimization session but
-    # which missed the r10 oracle sample (the rotation keyed off audit age,
-    # not the session's commits), plus the round-11 rewrites themselves.
-    # Prior rows no longer vouch for a rewritten plan — they re-enter the
-    # front of the capped audit window as if never covered. Retire once
-    # CORRECTNESS_r11.json records them.
+    # (Round-11 churn — the r10 rewrites that missed the r10 sample,
+    # the percentile/LM/KV-write rewrites and the 8 gates moved onto the
+    # state-store-sized session — is fully recorded in CORRECTNESS_r11.json:
+    # retired.)
+    # Current fronting: the drain-harness restructure rewrote the lifecycle
+    # (staging, session policy, checkpoint, cleanup) of all 14 gated
+    # streaming chains and of pyds_stream_source. Retire once a CORRECTNESS
+    # artifact records them.
     changed_now = {
-        # r10 rewrites without a driver-side r10 row:
-        "q21_waiting_suppliers",       # EXISTS/NOT-EXISTS → aggregates
-        "attribution_linear",          # single materialized range join
-        "percentiles_price",           # distributed percentile tier
-        # r11: grouped_exact_percentiles NULL-group/COUNT(*) fix + the
-        # directory-aware scale guard touched all three percentile specs
-        "anomaly_mad", "winsorize_stats",
-        "naive_bayes_lang",            # min_by argmax + checkpoint barriers
-        "ks_drift_value",              # min_by argmax
-        "histogram_equidepth",         # window-free rank machinery
-        "gini_revenue",
-        "decile_lift",
-        "revenue_concentration",
-        "perplexity_filter_verdict",
-        "pareto_front",                # size-guarded global_prefix_max
-        # r11: cab-relation materialization rewrote BOTH heldout LM specs
-        "kn_bigram_perplexity",
-        "lm_heldout_perplexity",
-        "dedup_levenshtein",           # one-shuffle candidate generation
-        "kv_compact_range_state",      # width-matched version writes
-        "kv_range_layout_scan",
-        # the 8 streaming gates moved onto the state-store-sized session:
-        "stream_cdc_kv_state", "stream_interval_join_clicks",
-        "stream_window_late", "stream_dedup_ingest", "stream_static_enrich",
-        "stream_hll_users", "stream_cms_tokens", "stream_mv_join_wide",
+        "stream_cdc_kv_state", "stream_sessionize_closed",
+        "stream_interval_join_clicks", "stream_neardup_pairs",
+        "stream_neardup_reps", "kv_compact_range_state",
+        "kv_range_layout_scan", "stream_dedup_ingest", "stream_window_late",
+        "stream_static_enrich", "stream_hll_users", "stream_cms_tokens",
+        "stream_mv_join", "stream_mv_join_wide", "pyds_stream_source",
     }
     covered -= changed_now
     # Front order (VERDICT r7 #2): never-audited / changed-this-round specs

@@ -1016,12 +1016,12 @@ def test_cdc_full_redrain_is_noop(spark, tmp_path):
 
     from templatedb_spark.streaming.cdc import changes_from_events, stream_cdc_to_kv
     from templatedb_spark.streaming.events import read_events_stream
-    from templatedb_spark.streaming.gate import _stage_microbatches
+    from templatedb_spark.streaming.gate import _stage_events
     from tests.conftest import SF_SMALL
 
     stage = tmp_path / "stage"
     stage.mkdir()
-    _stage_microbatches(SF_SMALL, str(stage), n_batches=3)
+    _stage_events(SF_SMALL, 3)(str(stage))
     kv_dir = tmp_path / "kv"
     kv = KVTable(spark, str(kv_dir))
     stream_cdc_to_kv(
@@ -1045,12 +1045,15 @@ def test_cms_redrain_does_not_double_count(spark, tmp_path):
     same staged feed with the same query name against the same KV: the
     sketch must be bit-identical (tags recognized), and stripping the tags
     WOULD have doubled it (asserted by summing the partials)."""
-    from templatedb_spark.streaming import gate as g
+    import pyarrow.parquet as pq
+
+    from templatedb_spark.streaming.drain import stage_slices
     from tests.conftest import SF_SMALL
 
     stage = tmp_path / "stage"
     stage.mkdir()
-    g._stage_full_doc_microbatches(SF_SMALL, str(stage), n_batches=3)
+    docs = pq.read_table(f"{SF_SMALL}/documents.parquet", columns=["doc_id", "text"])
+    stage_slices(docs, str(stage), 3, ["doc_id"])
 
     # run the gate once, capturing its KV via a monkeypatched tempdir? No —
     # drive the apply path directly with a fixed qname, the same calls the
@@ -1125,12 +1128,12 @@ def test_cdc_checkpoint_restart_continues(spark, tmp_path):
 
     from templatedb_spark.streaming.cdc import changes_from_events, stream_cdc_to_kv
     from templatedb_spark.streaming.events import read_events_stream
-    from templatedb_spark.streaming.gate import _stage_microbatches
+    from templatedb_spark.streaming.gate import _stage_events
     from tests.conftest import SF_SMALL
 
     full = tmp_path / "full"
     full.mkdir()
-    _stage_microbatches(SF_SMALL, str(full), n_batches=3)
+    _stage_events(SF_SMALL, 3)(str(full))
 
     stage = tmp_path / "stage"
     stage.mkdir()
