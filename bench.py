@@ -144,6 +144,20 @@ def main() -> None:
     # adds driver event-loop latency that stretches the latency-bound
     # chains in the lane beside it.
     workers = int(os.environ.get("SPARK_GRAFT_BENCH_WORKERS", "20"))
+    # Cap on each DuckDB baseline attempt, so a hung baseline can never stall
+    # the bench run: the concurrent DuckDB suite takes 20-70 s at sf0.1 solo;
+    # 600 s absorbs contention stretch without letting a true hang run
+    # forever. Env-tunable because the sf1 lane's DuckDB tail (tfidf ~12 min
+    # solo) needs a bigger cap (r11, OPTIMIZATION_r11.md "sf1 lane"). Parsed
+    # up front: a malformed value is a config error, raised before any work,
+    # not a baseline failure logged after the run.
+    raw_timeout = os.environ.get("SPARK_GRAFT_BASELINE_TIMEOUT_S", "600")
+    try:
+        baseline_timeout_s = float(raw_timeout)
+    except ValueError:
+        raise ValueError(
+            f"SPARK_GRAFT_BASELINE_TIMEOUT_S={raw_timeout!r} is not a number of seconds"
+        ) from None
 
     # Scratch on tmpfs (r8): the 15 serial trigger chains checkpoint offset/
     # commit logs, state-store deltas, KV versions, and staging slices through
@@ -690,12 +704,12 @@ def main() -> None:
         # specs solo-warmed by the adaptive 2.5×-of-last-solo trigger alone
         "solo_trigger": solo_trigger,
     }
-    # drop the dedup family's cached intermediates before teardown (no-op for
-    # this process's lifetime, but keeps the teardown path honest for anyone
+    # release every memoized intermediate before teardown (no-op for this
+    # process's lifetime, but keeps the teardown path honest for anyone
     # looping the bench in one session)
-    from templatedb_spark.operators.dedup import clear_dedup_caches
+    from templatedb_spark import memo
 
-    clear_dedup_caches(spark)
+    memo.release(spark)
     # The driver parses the FINAL stdout line as JSON and stores only a bounded
     # tail of the raw stream (BENCH_r01 recorded parsed=null because the line
     # was diluted by late JVM log output). Three defenses: stop the JVM first
@@ -733,18 +747,7 @@ def main() -> None:
                         ],
                         capture_output=True,
                         text=True,
-                        # bounded so a hung baseline can never stall the
-                        # bench run: the concurrent DuckDB suite takes
-                        # 20-70 s at sf0.1 solo; 600 s absorbs contention
-                        # stretch without letting a true hang run forever.
-                        # Env-tunable (default unchanged) because the sf1
-                        # lane's DuckDB tail (tfidf ~12 min solo) needs a
-                        # bigger cap — measurement harness only, the timed
-                        # region and query set are untouched (r11, see
-                        # OPTIMIZATION_r11.md "sf1 lane").
-                        timeout=float(
-                            os.environ.get("SPARK_GRAFT_BASELINE_TIMEOUT_S", "600")
-                        ),
+                        timeout=baseline_timeout_s,
                     )
                     duck = json.loads(proc.stdout.strip().splitlines()[-1])
                 except (subprocess.TimeoutExpired, ValueError, IndexError) as te:

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from templatedb_spark.memo import memo
 from templatedb_spark.suite import QuerySpec, register, table
 
 
@@ -269,34 +270,6 @@ _IVF_NPROBE_SQL = f"""SELECT CASE WHEN COUNT(*) <= {_IVF_NPROBE_SMALL_N} THEN {_
     CEIL(COUNT(*) / GREATEST({_IVF_CENTROID_STEP}.0, CEIL(COUNT(*) / {_IVF_MAX_CELLS}.0)))
     / {_IVF_PROBE_FRAC_DEN}.0) AS BIGINT)) END FROM embeddings"""
 
-# Per-(applicationId, sf_dir) broadcast of the centroid matrix. Centroids are
-# tiny (N / _IVF_CENTROID_STEP rows) and immutable for a given sf_dir, so one
-# collect per app amortizes to nothing; the broadcast handle keeps the matrix
-# off the closure-serialization path for every subsequent task.
-# _CACHE_LOCK serializes the build paths: the bench submits ann_ivf_topk and
-# semantic_dedup (same memo key) from 16 threads concurrently — an unlocked
-# check-then-set would build and cache the full-corpus kernel twice.
-import threading
-
-_CACHE_LOCK = threading.Lock()
-_IVF_CENT_CACHE: dict[tuple[str, str], object] = {}
-
-
-def clear_ann_caches() -> None:
-    """Evict the similarity tier's caches (called by dedup.clear_dedup_caches).
-    Broadcasts are explicitly unpersisted — catalog.clearCache() only drops
-    DataFrame cache entries, so dict-clearing alone would leak the centroid
-    broadcasts for the app lifetime in a regen-looping session."""
-    with _CACHE_LOCK:
-        for bc in _IVF_CENT_CACHE.values():
-            try:
-                bc.unpersist()
-            except Exception:
-                pass  # a dead SparkContext at teardown is fine
-        _IVF_CENT_CACHE.clear()
-        _LSH_N_CACHE.clear()
-        _ANN_MEMO.clear()
-
 # Below this parquet size the corpus is so small that kernel/Arrow spin-up
 # costs more than the interpreted expression path it replaces. All driver sf
 # dirs are above it (sf0.001's embeddings ≈ 190 KB), so the kernel path is the
@@ -329,27 +302,26 @@ def _seq_matmul(a, b_t):
 
 
 def _ivf_centroids_bc(spark: SparkSession, sf_dir: str):
+    """Broadcast of the centroid matrix, one per (app, sf). Centroids are
+    tiny (N / _IVF_CENTROID_STEP rows) and immutable for a given sf_dir, so
+    one collect per app amortizes to nothing; the broadcast handle keeps the
+    matrix off the closure-serialization path for every subsequent task."""
     import numpy as np
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    # step BEFORE taking the lock: _corpus_count acquires _CACHE_LOCK itself
-    # (non-reentrant) — computing it inside the held block deadlocks
-    step = ivf_step_for(_corpus_count(spark, sf_dir))
-    with _CACHE_LOCK:
-        bc = _IVF_CENT_CACHE.get(key)
-        if bc is None:
-            rows = (
-                spark.read.parquet(f"{sf_dir.rstrip('/')}/embeddings.parquet")
-                .filter(F.col("vec_id") % step == 0)
-                .select("vec_id", "embedding")
-                .collect()
-            )
-            rows.sort(key=lambda r: r.vec_id)  # cid-ascending → argmax tiebreak = min cid
-            cids = np.array([r.vec_id for r in rows], dtype="int64")
-            cmat = np.array([list(r.embedding) for r in rows], dtype="float64")
-            bc = spark.sparkContext.broadcast((cids, cmat, _seq_norms(cmat)))
-            _IVF_CENT_CACHE[key] = bc
-    return bc
+    def build():
+        step = ivf_step_for(_corpus_count(spark, sf_dir))
+        rows = (
+            spark.read.parquet(f"{sf_dir.rstrip('/')}/embeddings.parquet")
+            .filter(F.col("vec_id") % step == 0)
+            .select("vec_id", "embedding")
+            .collect()
+        )
+        rows.sort(key=lambda r: r.vec_id)  # cid-ascending → argmax tiebreak = min cid
+        cids = np.array([r.vec_id for r in rows], dtype="int64")
+        cmat = np.array([list(r.embedding) for r in rows], dtype="float64")
+        return spark.sparkContext.broadcast((cids, cmat, _seq_norms(cmat)))
+
+    return memo(spark, sf_dir, "similarity.ivf_centroids", build)
 
 
 def _ivf_assign_kernel(spark: SparkSession, sf_dir: str, e: DataFrame) -> DataFrame:
@@ -381,12 +353,13 @@ def _ivf_assign_kernel(spark: SparkSession, sf_dir: str, e: DataFrame) -> DataFr
                 }
             )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "ivf-assign")
-    return _ann_memo(
-        key,
+    return memo(
+        spark,
+        sf_dir,
+        "similarity.ivf_assign",
         lambda: e.mapInPandas(
             assign, schema="vec_id long, v array<double>, norm double, cid long"
-        ),
+        ).cache(),
     )
 
 
@@ -602,38 +575,23 @@ def _lsh_sig_sql(vec_expr: str, bits_expr: str, seed: int = _LSH_SEED) -> str:
     return "(" + " + ".join(terms) + ")::BIGINT"
 
 
-_LSH_N_CACHE: dict[tuple[str, str], int] = {}
+def _corpus_count(spark: SparkSession, sf_dir: str) -> int:
+    """Embeddings row count, cached per (app, sf) — a parquet-metadata-only
+    job, so at 100 TB it reads footers, not data."""
+    return memo(
+        spark,
+        sf_dir,
+        "similarity.corpus_count",
+        lambda: spark.read.parquet(f"{sf_dir.rstrip('/')}/embeddings.parquet").count(),
+    )
+
 
 # Kernel outputs are deterministic per (app, sf[, table spec]) and referenced
 # several times within one query plan (corpus side + query side + rep side) —
 # and across queries (ann_ivf_topk and semantic_dedup share one assignment).
-# Without this memo the mapInPandas kernel re-executes per reference (the
-# banded plan showed 4 MapInPandas nodes). Mirrors dedup.py's shingle-cache
-# contract; cleared by clear_dedup_caches().
-_ANN_MEMO: dict[tuple, DataFrame] = {}
-
-
-def _ann_memo(key: tuple, build) -> DataFrame:
-    with _CACHE_LOCK:
-        df = _ANN_MEMO.get(key)
-        if df is None:
-            df = build().cache()
-            _ANN_MEMO[key] = df
-        return df
-
-
-def _corpus_count(spark: SparkSession, sf_dir: str) -> int:
-    """Embeddings row count, cached per (app, sf) — a parquet-metadata-only
-    job, so at 100 TB it reads footers, not data."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _CACHE_LOCK:
-        if key not in _LSH_N_CACHE:
-            _LSH_N_CACHE[key] = spark.read.parquet(
-                f"{sf_dir.rstrip('/')}/embeddings.parquet"
-            ).count()
-        return _LSH_N_CACHE[key]
-
-
+# Without the memo the mapInPandas kernel re-executes per reference (the
+# banded plan showed 4 MapInPandas nodes), so each kernel output is cached
+# once per (app, sf) — the shingle cache's contract in dedup.py.
 def _lsh_sig_kernel(
     spark: SparkSession, sf_dir: str, tables: list[tuple[int, int, int]]
 ) -> DataFrame:
@@ -678,12 +636,13 @@ def _lsh_sig_kernel(
     raw = table(spark, sf_dir, "embeddings").select(
         "vec_id", _vec_double("embedding").alias("v")
     )
-    key = (spark.sparkContext.applicationId, sf_dir, "lsh", tuple(tables))
-    return _ann_memo(
-        key,
+    return memo(
+        spark,
+        sf_dir,
+        ("similarity.lsh_sig", tuple(tables)),
         lambda: raw.mapInPandas(
             kern, schema="vec_id long, v array<double>, norm double, t int, sig long"
-        ),
+        ).cache(),
     )
 
 
@@ -1307,12 +1266,13 @@ _KM_QSQL = "list_transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 127) A
 
 
 def _km_quantized_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, "km-quant")
-    return _ann_memo(
-        key,
-        lambda: table(spark, sf_dir, "embeddings").select(
-            "vec_id", F.expr(_KM_QEXPR).alias("q")
-        ),
+    return memo(
+        spark,
+        sf_dir,
+        "similarity.km_quant",
+        lambda: table(spark, sf_dir, "embeddings")
+        .select("vec_id", F.expr(_KM_QEXPR).alias("q"))
+        .cache(),
     )
 
 

@@ -404,12 +404,9 @@ _register_spec()
 # double-committed task, or a manifest/visibility bug all hash-mismatch.
 # ---------------------------------------------------------------------------
 def pyds_jsondir_roundtrip(spark: SparkSession, sf_dir: str):
-    import atexit
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
+    from templatedb_spark.memo import result_dir
     from templatedb_spark.suite import table
 
     register_python_sources(spark)
@@ -423,8 +420,7 @@ def pyds_jsondir_roundtrip(spark: SparkSession, sf_dir: str):
         spark._jsparkSession.setActiveSession(spark._jsparkSession)
     except Exception:
         pass  # private-API drift: the write then only works main-thread
-    out = tempfile.mkdtemp(prefix="jsondir_spec_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
+    out = result_dir("jsondir_spec_")
     src = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", F.col("o_totalprice").cast("double").alias("price")
     ).filter(F.col("o_orderkey") % 50 == 0)

@@ -19,15 +19,13 @@ master has no per-host tmpfs every executor can reach, so it needs the
 deployment path in SPARK_GRAFT_STREAM_CKPT.
 
 Dirs the returned DataFrame still reads after the drain (KV roots, a file
-sink) come from `result_dir` and are removed at process exit -- the one
+sink) come from `memo.result_dir` and are removed at process exit -- the one
 lifetime the harness cannot bound.
 """
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
 import tempfile
 import uuid
 from collections.abc import Callable, Iterator, Sequence
@@ -106,14 +104,6 @@ def stage_slices(
     table = table.take(pc.sort_indices(table, sort_keys=[(c, "ascending") for c in order]))
     step = (table.num_rows + n - 1) // n
     write_parts([table.slice(i * step, step) for i in range(n)], out_dir)
-
-
-def result_dir(prefix: str) -> str:
-    """A dir the returned DataFrame still reads once the drain is over;
-    removed at process exit."""
-    d = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return d
 
 
 @dataclass

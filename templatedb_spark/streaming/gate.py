@@ -27,8 +27,9 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from templatedb_spark.memo import result_dir
 from templatedb_spark.streaming.cdc import CDC_KEY_OFFSET
-from templatedb_spark.streaming.drain import drain, result_dir, stage_slices, write_parts
+from templatedb_spark.streaming.drain import drain, stage_slices, write_parts
 from templatedb_spark.suite import QuerySpec, register
 
 # Default trigger count: 2 is the semantic minimum for a cross-batch state

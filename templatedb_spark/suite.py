@@ -121,8 +121,11 @@ def all_specs() -> dict[str, QuerySpec]:
     # retired.)
     # Current fronting: the drain-harness restructure rewrote the lifecycle
     # (staging, session policy, checkpoint, cleanup) of all 14 gated
-    # streaming chains and of pyds_stream_source. Retire once a CORRECTNESS
-    # artifact records them.
+    # streaming chains and of pyds_stream_source; the memo registry
+    # (memo.py) moved every session-wide intermediate onto one keyed,
+    # locked, fingerprinted store, so the second set is every spec a static
+    # call graph reaches from a migrated memo helper. Retire both once a
+    # CORRECTNESS artifact records them.
     changed_now = {
         "stream_cdc_kv_state", "stream_sessionize_closed",
         "stream_interval_join_clicks", "stream_neardup_pairs",
@@ -130,6 +133,14 @@ def all_specs() -> dict[str, QuerySpec]:
         "kv_range_layout_scan", "stream_dedup_ingest", "stream_window_late",
         "stream_static_enrich", "stream_hll_users", "stream_cms_tokens",
         "stream_mv_join", "stream_mv_join_wide", "pyds_stream_source",
+    } | {
+        "ann_ivf_topk", "ann_lsh_banded_topk", "ann_lsh_topk",
+        "ann_recall_eval", "bpe_encode", "bpe_learn_merges", "dedup_cascade",
+        "dedup_dup_clusters", "dedup_embedding_cosine",
+        "dedup_embedding_lsh_cosine", "dedup_keep_policy", "graph_bfs_hops",
+        "graph_pagerank", "graph_triangles", "kmeans_quantized",
+        "orc_sink_roundtrip", "partition_pruned_scan", "rrf_fusion",
+        "semantic_dedup",
     }
     covered -= changed_now
     # Front order (VERDICT r7 #2): never-audited / changed-this-round specs

@@ -228,19 +228,18 @@ def test_threshold_sweep_mass_equals_pairs(spark):
 
 
 def test_bpe_memo_eviction_unpersists_checkpoints(spark):
-    """clear_dedup_caches must release the executor blocks behind the BPE
-    memo's localCheckpoint'd state, not just drop the Python references
-    (ADVICE r3) — otherwise checkpointed RDDs accumulate over cache cycles."""
+    """memo.release must release the executor blocks behind the BPE memo's
+    localCheckpoint'd state, not just drop the Python references (ADVICE
+    r3) — otherwise checkpointed RDDs accumulate over cache cycles."""
+    from templatedb_spark import memo
     from templatedb_spark.operators import curation
-    from templatedb_spark.operators.dedup import clear_dedup_caches
 
-    curation._bpe_state(spark, SF_SMALL)  # populate the memo (checkpoints)
-    assert curation._BPE_MEMO
+    state = curation._bpe_state(spark, SF_SMALL)  # populate the memo (checkpoints)
+    assert curation._bpe_state(spark, SF_SMALL) is state
     jsc = spark.sparkContext._jsc.sc()
     before = jsc.getPersistentRDDs().size()
     assert before > 0
-    clear_dedup_caches(spark)
-    assert not curation._BPE_MEMO
+    memo.release(spark)
     assert jsc.getPersistentRDDs().size() < before
 
 
